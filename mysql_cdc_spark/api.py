@@ -139,7 +139,10 @@ class CDCStatement:
         reader thread with inotify wake → incremental decode → bounded
         queue → blocking FILTERED ResultSet (jdbc.clj:164-185 filter
         semantics over :205-331's cursor) — with no Spark job per turn
-        (ms-latency; the Spark path pays the micro-batch floor).
+        (ms-latency; the Spark path pays the micro-batch floor).  The
+        statement's table and delta-type predicate is applied at
+        delivery: only the rows the cursor surfaces are enveloped and
+        queued (`PushDelivery.filter_rows`).
 
         Returns (FilteredPushCursor, PushDelivery): iterate the cursor,
         call `delivery.stop()` to end the query.  `journal_path` makes
@@ -148,8 +151,8 @@ class CDCStatement:
         `first_log` defaults to the lexically first `*.NNNNNN` file in
         the directory (the reference's log-index discovery, S5)."""
         import os
-        import re
 
+        from mysql_cdc_spark.sources.binlog_source import _ROTATED_LOG_RE
         from mysql_cdc_spark.streaming.push import (
             FilteredPushCursor,
             PushDelivery,
@@ -160,14 +163,16 @@ class CDCStatement:
         parsed = q.parse_statement(sql)
         if first_log is None:
             logs = sorted(
-                p for p in os.listdir(binlog_dir) if re.search(r"\.\d+$", p)
+                p for p in os.listdir(binlog_dir) if _ROTATED_LOG_RE.search(p)
             )
             if not logs:
                 raise FileNotFoundError(f"no binlog files in {binlog_dir}")
             first_log = logs[0]
-        # Construct (and thereby validate the delta type) BEFORE
-        # starting the tailer thread: a rejected statement must not
-        # leak a running delivery holding the inotify fd and journal.
+        # The cursor validates the delta type and installs the
+        # statement's predicate on the delivery, so it must exist
+        # BEFORE the tailer thread starts: the filter is applied at
+        # delivery from the first turn, and a rejected statement must
+        # not leak a running delivery holding the inotify fd and journal.
         delivery = PushDelivery(
             binlog_dir, first_log, catalog, journal_path=journal_path
         )

@@ -46,6 +46,7 @@ class BinlogTailer:
         on_error: str = "raise",
         only_tables: set[tuple[str, str]] | None = None,
         only_ops: set[str] | None = None,
+        stringify: bool = False,
     ) -> None:
         self.log_dir = log_dir
         self.current_log = first_log
@@ -61,6 +62,9 @@ class BinlogTailer:
         # (r16): an insert-only tail never parses update/delete images.
         self.only_tables = only_tables
         self.only_ops = only_ops
+        # Decode row images straight into the envelope string form, for
+        # consumers that envelope with `stringified=True` (push delivery).
+        self.stringify = stringify
         # 'quarantine' = dead-letter poison events and keep tailing —
         # a live tailer must not die on one malformed event.
         self.on_error = on_error
@@ -145,7 +149,7 @@ class BinlogTailer:
                     tail, self.offset, self.table_map, self.catalog,
                     base=self.offset, on_error=self.on_error,
                     checksum=self.checksum, only_tables=self.only_tables,
-                    only_ops=self.only_ops,
+                    only_ops=self.only_ops, stringify=self.stringify,
                 )
             finally:
                 if mm is not None:

@@ -16,7 +16,16 @@ without JNotify/JDBC:
   that with `queue.Queue(maxsize=10)` of event batches;
 - `PushCursor` is the forward-only blocking ResultSet over that queue
   (jdbc.clj:205-331): `next()` advances or blocks, rows arrive in log
-  order, driver memory is bounded by queue_size × batch size.
+  order, driver memory is bounded by queue_size × batch size;
+- the reference filters its ResultSet to one table and delta type
+  (jdbc.clj:164-185).  Here the statement's predicate is applied at
+  DELIVERY (`PushDelivery.filter_rows`, installed by
+  `FilteredPushCursor`): events that fail it are never enveloped or
+  queued, yet each still takes its per-file `seq` slot, so a surfaced
+  record is identical to the one an unfiltered delivery would carry.
+  Decode stays full — foreign-table row bodies are still parsed, so
+  malformed bytes raise or quarantine exactly as without the filter —
+  and images arrive from the codec already in envelope string form.
 
 Division of labor with streaming/runtime.py: the Structured-Streaming
 path (parquet event-log → file-stream source → sinks) is the DURABLE,
@@ -119,7 +128,10 @@ class PushDelivery:
     re-read and re-delivered — at-least-once with NO silent loss, and
     exactly-once (no duplicates) on a clean drain-then-stop.  A crash
     mid-batch replays that one batch; consumers needing exactly-once
-    under crashes dedup by (log_file, offset).  Single-consumer
+    under crashes dedup by (log_file, offset).  Under `filter_rows` a
+    turn whose records all drop still queues its snapshot as an empty
+    batch, so the consumed position keeps moving on a quiet table (no
+    old log pinned, nothing re-read on restart).  Single-consumer
     contract: one cursor owns the journal advance.  The reference
     keeps its position only in agent memory and loses it on restart
     (mysql_binlog.clj:914-916); this is the push-path analog of the
@@ -143,11 +155,17 @@ class PushDelivery:
         self._poll = poll_fallback_seconds
         self._log_dir = log_dir
         self.error: BaseException | None = None
+        # Images come out of the codec in envelope string form, so
+        # `_deliver` envelopes with stringified=True (no second walk).
         self.tailer = BinlogTailer(
             log_dir, first_log, self._deliver, catalog, on_error=on_error,
-            only_tables=only_tables,
+            only_tables=only_tables, stringify=True,
         )
+        # (db, table, row ops) the statement surfaces; None delivers
+        # every envelope record.  Set through `filter_rows`.
+        self.row_filter: tuple[str, str, frozenset[str]] | None = None
         self._journal_path = journal_path
+        self._journaled_pos: tuple[str, int] | None = None
         self._restore_journal()
         self._watcher: INotifyWatcher | None = None
         self._thread = threading.Thread(
@@ -216,7 +234,7 @@ class PushDelivery:
         if self._journal_path is None or state is None:
             return
         pos = (state["log"], state["offset"])
-        if pos == getattr(self, "_journaled_pos", None):
+        if pos == self._journaled_pos:
             return
         self._journaled_pos = pos
         import json
@@ -226,12 +244,41 @@ class PushDelivery:
             json.dump(state, fh)
         os.replace(tmp, self._journal_path)  # atomic: never a torn journal
 
+    def filter_rows(self, db: str, table: str, ops) -> None:
+        """Deliver only the change rows of `db`.`table` whose op is in
+        `ops`; every other event — other tables, other ops, txn
+        bookkeeping, quarantine records — is dropped before an
+        envelope record is built.  Must be called before `start()`:
+        the tailer thread reads the predicate without a lock."""
+        if self._thread.ident is not None:
+            raise RuntimeError("filter_rows() after start()")
+        self.row_filter = (db, table, frozenset(ops))
+
     def _deliver(self, batch: list[dict]) -> None:
         log_file = batch[0]["log_file"]
-        records, self._seq[log_file] = envelope_records(
-            batch, log_file, self._seq.get(log_file, 0)
-        )
+        seq = self._seq.get(log_file, 0)
+        if self.row_filter is None:
+            records, self._seq[log_file] = envelope_records(
+                batch, log_file, seq, stringified=True
+            )
+        else:
+            # The tailer hands over envelope events only, each of which
+            # takes one seq slot whether or not it survives the filter:
+            # number the kept events locally, then map to their slots.
+            db, tbl, ops = self.row_filter
+            kept = [
+                i for i, ev in enumerate(batch)
+                if ev["op"] in ops and ev["tbl"] == tbl and ev["db"] == db
+            ]
+            records, _ = envelope_records(
+                [batch[i] for i in kept], log_file, stringified=True
+            )
+            for rec in records:
+                rec["seq"] = seq + kept[rec["seq"]]
+            self._seq[log_file] = seq + len(batch)
         snap = self._snapshot() if self._journal_path is not None else None
+        if not records and snap is None:
+            return  # nothing to surface and no position to journal
         # Bounded put with a stop check: producer-side backpressure
         # without deadlocking shutdown.  A batch dropped here at
         # shutdown is safe: its snapshot was never journaled, so a
@@ -292,25 +339,26 @@ class PushCursor:
         arrives or `timeout` elapses (False on timeout).  Re-raises a
         tailer-thread failure instead of blocking forever.  Handing out
         a batch's LAST record journals that batch's snapshot (consumed
-        position) — see PushDelivery's durability contract."""
-        if self._pos + 1 >= len(self._batch):
-            deadline = None if timeout is None else time.monotonic() + timeout
-            while True:
-                if self._delivery.error is not None:
-                    raise self._delivery.error
-                remaining = 0.1
-                if deadline is not None:
-                    remaining = min(remaining, deadline - time.monotonic())
-                    if remaining <= 0:
-                        return False
-                try:
-                    self._batch, self._snap = self._delivery.queue.get(
-                        timeout=remaining
-                    )
-                    self._pos = -1
-                    break
-                except queue.Empty:
-                    continue
+        position) — see PushDelivery's durability contract.  An empty
+        batch (a turn that surfaced nothing) is journaled on arrival."""
+        deadline = None if timeout is None else time.monotonic() + timeout
+        while self._pos + 1 >= len(self._batch):
+            if self._delivery.error is not None:
+                raise self._delivery.error
+            remaining = 0.1
+            if deadline is not None:
+                remaining = min(remaining, deadline - time.monotonic())
+                if remaining <= 0:
+                    return False
+            try:
+                self._batch, self._snap = self._delivery.queue.get(
+                    timeout=remaining
+                )
+            except queue.Empty:
+                continue
+            self._pos = -1
+            if not self._batch:
+                self._delivery._journal_state(self._snap)
         self._pos += 1
         self.current = self._batch[self._pos]
         if self._pos == len(self._batch) - 1:
@@ -365,12 +413,12 @@ _DELTA_TO_OP = {
 
 
 class FilteredPushCursor(PushCursor):
-    """The reference's filtered blocking ResultSet over the push queue:
-    only change rows of one (db, table) [and one delta type] surface;
-    everything else (other tables, txn bookkeeping) is skipped inline
-    (jdbc.clj:176-182 applied record-at-a-time).  `next()` keeps the
-    blocking contract — it consumes non-matching records without
-    returning, until a match arrives or the timeout elapses."""
+    """The reference's filtered blocking ResultSet over the push queue
+    (jdbc.clj:176-182): only change rows of one (db, table) [and one
+    delta type] surface.  The constructor validates the delta type and
+    installs the predicate on the (not yet started) delivery, which
+    drops everything else before it is enveloped — so `next()` is the
+    plain blocking `PushCursor.next` with no per-record re-check."""
 
     def __init__(
         self,
@@ -379,28 +427,10 @@ class FilteredPushCursor(PushCursor):
         table: str,
         delta_type: str | None = None,
     ) -> None:
-        super().__init__(delivery)
         if delta_type is not None and delta_type not in _DELTA_TO_OP:
             raise ValueError(f"unknown _delta_type {delta_type!r}")
-        self._db, self._tbl = db, table
-        self._ops = (
-            {_DELTA_TO_OP[delta_type]} if delta_type else set(_DELTA_TO_OP.values())
+        super().__init__(delivery)
+        delivery.filter_rows(
+            db, table,
+            {_DELTA_TO_OP[delta_type]} if delta_type else _DELTA_TO_OP.values(),
         )
-
-    def next(self, timeout: float | None = None) -> bool:
-        deadline = None if timeout is None else time.monotonic() + timeout
-        while True:
-            remaining = None
-            if deadline is not None:
-                remaining = deadline - time.monotonic()
-                if remaining <= 0:
-                    return False
-            if not super().next(timeout=remaining):
-                return False
-            c = self.current
-            if (
-                c.get("db") == self._db
-                and c.get("tbl") == self._tbl
-                and c.get("op") in self._ops
-            ):
-                return True

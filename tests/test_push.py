@@ -643,3 +643,404 @@ while True:            # spin until SIGKILLed: no graceful shutdown runs
     counts = Counter(consumed1 + replayed)
     assert all(c <= 2 for c in counts.values())
     assert sorted(k for k, c in counts.items() if c == 2) == sorted(overlap)
+
+
+# -- the statement's predicate, applied at delivery ------------------------
+
+_BIG = TableDef("bench", "big", _T.columns, table_id=2)
+_CAT2 = {**_CAT, ("bench", "big"): ["id", "val", "word"]}
+# every `_delta_type` spelling the grammar accepts, plus no delta filter
+_DELTAS = (None, "insert", "update", "update-before", "update-after", "delete")
+
+
+def _record_filter(records, db, tbl, delta_type):
+    """The cursor's former per-record check, kept as the reference the
+    delivery-side filter must reproduce exactly."""
+    from mysql_cdc_spark.streaming.push import _DELTA_TO_OP
+
+    ops = {_DELTA_TO_OP[delta_type]} if delta_type else set(_DELTA_TO_OP.values())
+    return [
+        r for r in records
+        if r.get("db") == db and r.get("tbl") == tbl and r.get("op") in ops
+    ]
+
+
+def _mixed_txns(w, first: int, n: int) -> None:
+    """Transactions that touch both tables with every row op, several
+    rows per event, so the filter drops events inside a transaction."""
+    from mysql_cdc_spark.sources.binlog_codec import (
+        DELETE_ROWS_EVENT,
+        UPDATE_ROWS_EVENT,
+    )
+
+    for i in range(first, first + n):
+        w.write_query("foo", "BEGIN", ts=i)
+        for t in (_T, _BIG) if i % 2 else (_BIG, _T):
+            w.write_table_map(t, ts=i)
+            w.write_rows(WRITE_ROWS_EVENT, t,
+                         [[i, f"{i}.0000", "a"], [i + 1000, "0.5000", None]], ts=i)
+        w.write_table_map(_T, ts=i)
+        w.write_rows(UPDATE_ROWS_EVENT, _T,
+                     [([i, f"{i}.0000", "a"], [i, f"{i}.2500", "b"])], ts=i)
+        w.write_table_map(_BIG, ts=i)
+        w.write_rows(DELETE_ROWS_EVENT, _BIG, [[i + 1000, "0.5000", None]], ts=i)
+        w.write_table_map(_T, ts=i)
+        w.write_rows(DELETE_ROWS_EVENT, _T, [[i, f"{i}.2500", "b"]], ts=i)
+        w.write_xid(i, ts=i)
+
+
+def _start_all(path, tables, catalog=_CAT2, **kw):
+    """One unfiltered delivery plus one filtered delivery per (table,
+    delta type); the queues are large enough that no tailer blocks."""
+    from mysql_cdc_spark.streaming.push import FilteredPushCursor
+
+    ref = PushDelivery(str(path), "binlog.000001", catalog, queue_size=100_000, **kw)
+    runs = {}
+    for db, tbl in tables:
+        for delta in _DELTAS:
+            d = PushDelivery(str(path), "binlog.000001", catalog, queue_size=100_000, **kw)
+            runs[(db, tbl, delta)] = (FilteredPushCursor(d, db, tbl, delta), d)
+    for d in [ref] + [d for _, d in runs.values()]:
+        d.start()
+    return ref, runs
+
+
+def _assert_parity(ref, runs) -> list[dict]:
+    try:
+        full = list(ref.cursor().drain(idle_timeout=1.0))
+        for (db, tbl, delta), (cur, _) in runs.items():
+            want = _record_filter(full, db, tbl, delta)
+            got = _drain_all(cur, len(want))
+            assert got == want, (db, tbl, delta)
+            assert not cur.next(timeout=0.1), (db, tbl, delta)
+        return full
+    finally:
+        deliveries = [ref] + [d for _, d in runs.values()]
+        for d in deliveries:                   # signal all, then join
+            d._stop.set()
+        for d in deliveries:
+            d.stop()
+
+
+_TABLES = (("foo", "auto"), ("bench", "big"), ("foo", "absent"))
+
+
+def test_filtered_delivery_matches_record_filter(tmp_path):
+    """Record for record — seq, offset, row_idx and both images — the
+    filtered delivery equals an unfiltered one followed by the former
+    per-record filter, for every table and delta spelling."""
+    w = BinlogWriter()
+    _mixed_txns(w, 0, 12)
+    (tmp_path / "binlog.000001").write_bytes(w.getvalue())
+    ref, runs = _start_all(tmp_path, _TABLES)
+    full = _assert_parity(ref, runs)
+    assert len(full) == 12 * 14
+    surfaced = _record_filter(full, "foo", "auto", None)
+    # dropped events still take their seq slot: the surfaced seqs skip
+    assert len(surfaced) == 12 * 4
+    assert [r["row_idx"] for r in surfaced[:2]] == [0, 1]
+    assert max(r["seq"] for r in surfaced) == full[-1]["seq"] - 1
+
+
+def test_filtered_delivery_parity_crc32_log_and_typed_envelope(tmp_path):
+    """CRC32 framing, and the codec's string-form images equal the
+    typed decode stringified per image (the envelope built by the
+    batch path)."""
+    from mysql_cdc_spark.sources.binlog_codec import decode_binlog
+    from mysql_cdc_spark.sources.binlog_source import envelope_records
+
+    w = BinlogWriter(checksum="crc32")
+    _mixed_txns(w, 0, 8)
+    (tmp_path / "binlog.000001").write_bytes(w.getvalue())
+    ref, runs = _start_all(tmp_path, _TABLES[:2])
+    full = _assert_parity(ref, runs)
+    typed, _ = envelope_records(
+        decode_binlog(w.getvalue(), _CAT2, checksum="crc32"), "binlog.000001"
+    )
+    assert full == typed
+
+
+def test_filtered_delivery_parity_across_rotation(tmp_path):
+    w1 = BinlogWriter()
+    _mixed_txns(w1, 0, 5)
+    w1.write_rotate("binlog.000002")
+    w2 = BinlogWriter()
+    _mixed_txns(w2, 5, 5)
+    (tmp_path / "binlog.000001").write_bytes(w1.getvalue())
+    (tmp_path / "binlog.000002").write_bytes(w2.getvalue())
+    ref, runs = _start_all(tmp_path, _TABLES[:2])
+    full = _assert_parity(ref, runs)
+    assert {r["log_file"] for r in full} == {"binlog.000001", "binlog.000002"}
+    second = [r["seq"] for r in full if r["log_file"] == "binlog.000002"]
+    assert second[0] == 0                      # per-file seq restarts
+
+
+def test_filtered_delivery_parity_live_torn_writes(tmp_path):
+    """The deliveries tail a log the writer drips in random chunks, so
+    turns end mid-header and mid-body; batch boundaries differ between
+    deliveries but the records must not."""
+    import random
+
+    w = BinlogWriter()
+    _mixed_txns(w, 0, 10)
+    data = w.getvalue()
+    (tmp_path / "binlog.000001").write_bytes(data[:4])
+    ref, runs = _start_all(tmp_path, _TABLES[:2])
+    rng = random.Random(7)
+    pos = 4
+    while pos < len(data):
+        n = rng.randint(1, 97)
+        with open(tmp_path / "binlog.000001", "ab") as fh:
+            fh.write(data[pos:pos + n])
+        pos += n
+        time.sleep(0.002)
+    full = _assert_parity(ref, runs)
+    assert len(full) == 10 * 14
+
+
+def _poisoned_log(path) -> None:
+    """foo.auto txns with a corrupt bench.big row event in txn 2."""
+    from mysql_cdc_spark.sources.binlog_codec import HEADER_LEN
+
+    w = BinlogWriter()
+    for i in range(4):
+        w.write_query("foo", "BEGIN", ts=i)
+        w.write_table_map(_T, ts=i)
+        w.write_rows(WRITE_ROWS_EVENT, _T, [[i, f"{i}.0000", "x"]], ts=i)
+        w.write_table_map(_BIG, ts=i)
+        start = w.offset
+        w.write_rows(WRITE_ROWS_EVENT, _BIG, [[i, f"{i}.0000", "y"]], ts=i)
+        if i == 2:
+            w.buf[start + HEADER_LEN:] = b"\xfe" * (len(w.buf) - start - HEADER_LEN)
+        w.write_xid(i, ts=i)
+    path.write_bytes(w.getvalue())
+
+
+def test_filtered_delivery_poison_in_foreign_table_raises(tmp_path):
+    """Decode stays full under the filter: a malformed foreign-table
+    row body still fails the query in raise mode."""
+    from mysql_cdc_spark.streaming.push import FilteredPushCursor
+
+    _poisoned_log(tmp_path / "binlog.000001")
+    d = PushDelivery(str(tmp_path), "binlog.000001", _CAT2)
+    cur = FilteredPushCursor(d, "foo", "auto", "insert")
+    d.start()
+    try:
+        with pytest.raises(ValueError, match="corrupt|columns"):
+            while cur.next(timeout=5.0):
+                pass
+    finally:
+        d.stop()
+
+
+def test_filtered_delivery_poison_in_foreign_table_quarantined(tmp_path):
+    _poisoned_log(tmp_path / "binlog.000001")
+    ref, runs = _start_all(tmp_path, _TABLES[:2], on_error="quarantine")
+    full = _assert_parity(ref, runs)
+    assert sum(r["op"] == "quarantine" for r in full) == 1
+    for db, tbl, _ in runs:
+        assert all(r["op"] != "quarantine" for r in _record_filter(full, db, tbl, None))
+    auto = _record_filter(full, "foo", "auto", None)
+    assert [r["after"]["id"] for r in auto] == ["0", "1", "2", "3"]
+
+
+def test_filtered_delivery_rejects_late_filter_and_bad_delta(tmp_path):
+    from mysql_cdc_spark.streaming.push import FilteredPushCursor
+
+    _GrowingLog(str(tmp_path / "binlog.000001"))
+    d = PushDelivery(str(tmp_path), "binlog.000001", _CAT)
+    with pytest.raises(ValueError, match="_delta_type"):
+        FilteredPushCursor(d, "foo", "auto", "upsert")
+    assert d.row_filter is None
+    d.start()
+    try:
+        with pytest.raises(RuntimeError, match="start"):
+            FilteredPushCursor(d, "foo", "auto")
+    finally:
+        d.stop()
+
+
+def test_filtered_journal_restart_at_random_boundaries(tmp_path):
+    """A filtered statement restarted from its journal at random
+    consumed boundaries (mid-event, across the rotation) surfaces the
+    same records, seq included, as one uninterrupted filtered run."""
+    import random
+
+    from mysql_cdc_spark.streaming.push import FilteredPushCursor
+
+    w1 = BinlogWriter()
+    _mixed_txns(w1, 0, 4)
+    w1.write_rotate("binlog.000002")
+    w2 = BinlogWriter()
+    _mixed_txns(w2, 4, 2)
+    files = (("binlog.000001", w1.getvalue()), ("binlog.000002", w2.getvalue()))
+
+    def open_query(d_dir, journal=None):
+        d = PushDelivery(str(d_dir), "binlog.000001", _CAT2, journal_path=journal)
+        cur = FilteredPushCursor(d, "foo", "auto", "update")
+        d.start()
+        return cur, d
+
+    def drain(cur, got):
+        while cur.next(timeout=0.6):
+            got.append(cur.current)
+
+    whole = tmp_path / "whole"
+    whole.mkdir()
+    for name, data in files:
+        (whole / name).write_bytes(data)
+    cur, d = open_query(whole)
+    expected: list[dict] = []
+    drain(cur, expected)
+    d.stop()
+    assert len(expected) == 6
+
+    for seed in (0, 1, 2):
+        rng = random.Random(seed)
+        s_dir = tmp_path / f"s{seed}"
+        s_dir.mkdir()
+        journal = str(s_dir / "push.journal")
+        got: list[dict] = []
+        cur, d = open_query(s_dir, journal)
+        chunk_i = 0
+        for name, data in files:
+            written = 0
+            while written < len(data):
+                n = rng.randint(1, 301)
+                with open(s_dir / name, "ab") as fh:
+                    fh.write(data[written:written + n])
+                written += n
+                chunk_i += 1
+                if chunk_i % 4 == 0:
+                    drain(cur, got)
+                    d.stop()
+                    cur, d = open_query(s_dir, journal)
+        drain(cur, got)
+        d.stop()
+        assert got == expected, f"seed {seed}"
+
+
+def test_filtered_journal_advances_on_quiet_table(tmp_path):
+    """Turns that surface nothing still move the journaled position,
+    so a cursor on a rarely written table pins no old log and a
+    restart does not re-read it; without a journal nothing is queued."""
+    import json
+
+    from mysql_cdc_spark.streaming.push import FilteredPushCursor
+
+    path = tmp_path / "binlog.000001"
+    w = BinlogWriter()
+    for i in range(6):                         # only the OTHER table moves
+        w.write_query("bench", "BEGIN", ts=i)
+        w.write_table_map(_BIG, ts=i)
+        w.write_rows(WRITE_ROWS_EVENT, _BIG, [[i, f"{i}.0000", "q"]], ts=i)
+        w.write_xid(i, ts=i)
+    path.write_bytes(w.getvalue())
+    journal = str(tmp_path / "push.journal")
+
+    quiet = PushDelivery(str(tmp_path), "binlog.000001", _CAT2)
+    FilteredPushCursor(quiet, "foo", "auto")
+    quiet.start()
+    try:
+        time.sleep(0.5)
+        assert quiet.tailer.offset == len(w.getvalue())
+        assert quiet.queue.empty()             # no empty batches w/o journal
+    finally:
+        quiet.stop()
+
+    d1 = PushDelivery(str(tmp_path), "binlog.000001", _CAT2, journal_path=journal)
+    cur1 = FilteredPushCursor(d1, "foo", "auto")
+    d1.start()
+    try:
+        assert not cur1.next(timeout=0.5)      # nothing surfaces ...
+    finally:
+        d1.stop()
+    state = json.loads(open(journal).read())
+    assert (state["log"], state["offset"]) == ("binlog.000001", len(w.getvalue()))
+    assert state["seq"] == {"binlog.000001": 6 * 4}   # ... but it was consumed
+
+    # the table finally gets a write: a restart reads only the new bytes
+    # and numbers the record exactly as an uninterrupted run would
+    w.write_table_map(_T, ts=9)
+    w.write_rows(WRITE_ROWS_EVENT, _T, [[9, "9.0000", "z"]], ts=9)
+    path.write_bytes(w.getvalue())
+    d2 = PushDelivery(str(tmp_path), "binlog.000001", _CAT2, journal_path=journal)
+    cur2 = FilteredPushCursor(d2, "foo", "auto")
+    assert d2.tailer.offset == state["offset"]
+    d2.start()
+    try:
+        assert cur2.next(timeout=10)
+        assert cur2.current["after"]["id"] == "9"
+        assert cur2.current["seq"] == 6 * 4 + 1
+    finally:
+        d2.stop()
+
+
+def test_execute_query_push_ignores_stray_numbered_files(tmp_path):
+    """First-log discovery takes only `<stem>.NNNNNN` names: a stray
+    `audit.1` or `backup.20261017` that sorts first is not a binlog."""
+    from mysql_cdc_spark import api
+
+    (tmp_path / "audit.1").write_bytes(b"not a binlog")
+    (tmp_path / "backup.20261017").write_bytes(b"nor this")
+    log = _GrowingLog(str(tmp_path / "binlog.000001"))
+    log.append_txn(3)
+    stmt = api.CDCConnection(None, str(tmp_path)).create_statement()
+    cur, delivery = stmt.execute_query_push(
+        'select * from "foo"."auto"', str(tmp_path), catalog=_CAT
+    )
+    try:
+        assert cur.next(timeout=10)
+        assert cur.current["after"]["id"] == "3"
+        assert delivery.error is None
+    finally:
+        delivery.stop()
+
+
+def test_push_benchmark_hook_points_are_patchable(tmp_path, monkeypatch):
+    """The traced push benchmark (perfbench/push_tail.py) times each
+    layer by replacing these module globals and class attributes; a
+    refactor that reaches them another way (a local import, a bound
+    alias) would leave its spans empty.  Each must be called through
+    the patched name during one filtered push query."""
+    import queue as _queue
+    from collections import Counter
+
+    from mysql_cdc_spark import api
+    from mysql_cdc_spark.streaming import binlog_tailer, push
+
+    calls: Counter = Counter()
+    hook_points = (
+        (push, "envelope_records"),
+        (push.FilteredPushCursor, "next"),
+        (binlog_tailer, "decode_binlog_incremental"),
+        (binlog_tailer.BinlogTailer, "turn"),
+    )
+    for owner, attr in hook_points:
+        orig = getattr(owner, attr)
+
+        def wrapper(*a, _orig=orig, _attr=attr, **kw):
+            calls[_attr] += 1
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    log = _GrowingLog(str(tmp_path / "binlog.000001"))
+    for i in range(3):
+        log.append_txn(i)
+    stmt = api.CDCConnection(None, str(tmp_path)).create_statement()
+    cur, delivery = stmt.execute_query_push(
+        'select * from "foo"."auto"', str(tmp_path), catalog=_CAT
+    )
+    try:
+        assert isinstance(cur, push.FilteredPushCursor)
+        assert isinstance(delivery, push.PushDelivery)
+        q = delivery.queue                     # sampled and its get timed
+        assert isinstance(q, _queue.Queue) and q.maxsize > 0
+        got = list(cur.drain(idle_timeout=1.0))
+        assert [r["after"]["id"] for r in got] == ["0", "1", "2"]
+        assert isinstance(delivery.tailer.last_read_bytes, int)
+        assert delivery.tailer.last_read_bytes >= 0
+    finally:
+        delivery.stop()
+    assert set(calls) == {attr for _, attr in hook_points}, calls
