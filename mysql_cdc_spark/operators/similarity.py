@@ -487,7 +487,8 @@ def _quantized_centroids(emb: DataFrame) -> DataFrame:
     # ivf family vs both a localCheckpoint and a driver LocalRelation,
     # which each cost more than they saved at sf0.1).  The residual /
     # opq paths instead COLLECT this frame once via
-    # _collected_centroids for their mapInArrow encode.  Tiny
+    # _collected_centroids for their mapInArrow encode, which drops
+    # the cache entry once the rows are on the driver.  Tiny
     # (label-cardinality rows); intra-query intermediate.
     return (
         cents.groupBy("label")
@@ -878,7 +879,13 @@ def _collected_centroids(emb: DataFrame):
     broadcasts, collected ONCE instead of once per broadcast."""
     import numpy as np
 
-    rows = sorted(_quantized_centroids(emb).collect())
+    cents = _quantized_centroids(emb)
+    try:
+        rows = sorted(cents.collect())
+    finally:
+        # the cache serves broadcast consumers; once collected, a
+        # pinned copy would outlive the query
+        cents.unpersist()
     labels = np.array([r["label"] for r in rows], dtype=np.int64)
     Cq = (
         np.array([r["cqv"] for r in rows], dtype=np.int64)
@@ -958,7 +965,7 @@ def _residual_codes_arrow(q, labels, Cq, Cn, code_ids, cb, m, d_sub, r_int):
     spark = q.sparkSession
     out_type = "neighbor_id long, cell long, sub int, code long"
     if len(labels) == 0 or len(code_ids) == 0:
-        return spark.createDataFrame([], out_type)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), out_type)
     subs = np.arange(m, dtype=np.int32)
 
     def encode(batches):

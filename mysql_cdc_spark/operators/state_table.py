@@ -36,10 +36,12 @@ Design — copy-on-write versions + an fsync'd pointer:
        one full-outer join where the snapshot side reads pre-bucketed
        buckets (no Exchange above its scan; the only shuffle is the
        O(batch) delta side) — the same physical shape as a Delta/
-       Iceberg MERGE without deletion vectors.  Tombstones are
-       RETAINED in the raw table (``current()`` filters them) because
-       micro-batches are not offset-ordered — see the operator's
-       docstring for the measured reordering;
+       Iceberg MERGE without deletion vectors.  A fresh table has no
+       snapshot: its first version is the batch's own
+       ``latest_state_with_tombstones`` aggregate, with no join.
+       Tombstones are RETAINED in the raw table (``current()``
+       filters them) because micro-batches are not offset-ordered —
+       see the operator's docstring for the measured reordering;
     3. write ``v{N+1}`` (a crashed attempt's partial dir is removed
        first, so re-execution converges instead of doubling);
     4. swap the pointer (fsync + atomic rename), then GC versions
@@ -100,6 +102,7 @@ from pyspark.sql import functions as F
 from mysql_cdc_spark.operators.aggregates import (
     _check_state_cols,
     apply_changes_keep_tombstones,
+    latest_state_with_tombstones,
 )
 
 _POINTER = "_state_pointer.json"
@@ -625,7 +628,10 @@ class StateTable:
 
         Cost model (r18): the default path rewrites the full state
         copy-on-write — O(state) per batch, with the bucketed layout
-        removing the shuffle but not the rewrite.  When the batch's
+        removing the shuffle but not the rewrite.  The FIRST version
+        (no committed pointer) is the batch's own per-key aggregate,
+        built and bucket-written over one exchange: 2 Spark jobs, no
+        snapshot frame, no join.  When the batch's
         keys hash into at most half the buckets (the CDC steady-state
         trickle: batch keys ≪ buckets), the INCREMENTAL path rewrites
         only the touched buckets and HARDLINKS the rest from the
@@ -723,24 +729,12 @@ class StateTable:
         """O(state) copy-on-write MERGE (the correctness baseline; also
         the widening path — the snapshot's missing columns NULL-
         backfill, a pure projection over the exchange-free bucketed
-        scan)."""
+        scan).  With ``ptr is None`` there is nothing to merge into:
+        the first version is the batch's own aggregate, built with one
+        exchange — the same rows, types and tombstones a MERGE into an
+        empty snapshot yields (test-pinned)."""
         schema_ddl = self._schema_ddl(self.keys, value_cols, col_types)
-        if ptr is None:
-            snapshot = spark.createDataFrame([], schema_ddl)
-            version = 0
-            n_buckets = self.n_buckets
-        else:
-            snapshot = self.current_raw(spark)
-            for c in value_cols:
-                if c not in snapshot.columns:
-                    snapshot = snapshot.withColumn(
-                        c, F.lit(None).cast(col_types[c])
-                    )
-            snapshot = snapshot.select(
-                *self.keys, *value_cols, "as_of_offset", "is_deleted"
-            )
-            version = ptr["version"] + 1
-            n_buckets = self._ptr_buckets(ptr)
+        n_buckets = self.n_buckets if ptr is None else self._ptr_buckets(ptr)
 
         # Pre-partition the delta side to the table's bucket count: the
         # batch aggregation then runs exchange-free on those partitions
@@ -752,9 +746,33 @@ class StateTable:
         # the whole plan — the O(batch) delta repartition
         # (pinned by tests/test_state_table.py).
         delta = batch_df.repartition(n_buckets, *self.keys)
-        new_state = apply_changes_keep_tombstones(
-            snapshot, delta, self.keys, value_cols
-        )
+        if ptr is None:
+            version = 0
+            # First version: the batch's own aggregate IS the state
+            # (merging into an empty snapshot keeps every delta row
+            # as-is).  No snapshot frame and no join: the aggregate's
+            # hash partitioning already satisfies _write_version's
+            # bucket repartition, so the delta repartition is the
+            # plan's only Exchange.  as_of_offset is cast to the
+            # table's declared BIGINT: a batch with INT offsets must
+            # write the type every later merge reads.
+            new_state = latest_state_with_tombstones(
+                delta, self.keys, value_cols
+            ).withColumn("as_of_offset", F.col("as_of_offset").cast("bigint"))
+        else:
+            version = ptr["version"] + 1
+            snapshot = self.current_raw(spark)
+            for c in value_cols:
+                if c not in snapshot.columns:
+                    snapshot = snapshot.withColumn(
+                        c, F.lit(None).cast(col_types[c])
+                    )
+            snapshot = snapshot.select(
+                *self.keys, *value_cols, "as_of_offset", "is_deleted"
+            )
+            new_state = apply_changes_keep_tombstones(
+                snapshot, delta, self.keys, value_cols
+            )
 
         self._write_version(spark, version, new_state, n_buckets)
         self._swap_pointer(
@@ -849,7 +867,9 @@ class StateTable:
         snap = (
             spark.read.schema(ptr["schema_ddl"]).parquet(*changed_files)
             if changed_files
-            else spark.createDataFrame([], ptr["schema_ddl"])
+            else spark.createDataFrame(
+                spark.sparkContext.emptyRDD(), ptr["schema_ddl"]
+            )
         )
         new_changed = apply_changes_keep_tombstones(
             snap, batch_df, self.keys, value_cols

@@ -21,8 +21,8 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -57,6 +57,9 @@ from mysql_cdc_spark.sources.binlog_codec import (
     TableDef,
     decode_binlog,
 )
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # Real column names for the fixture tables — the catalog lookup the
 # reference planned but never built (mysql_binlog.clj:505-508 "read
@@ -661,8 +664,11 @@ def read_binlog_envelope(
     if since is not None:
         paths = _list_log_files(path, since[0], spark)
         if not paths:
-            # nothing at or past the resume point: empty envelope
-            return spark.createDataFrame([], out_schema)
+            # nothing at or past the resume point: empty envelope over
+            # an empty RDD (0 partitions — a list would run a job)
+            return spark.createDataFrame(
+                spark.sparkContext.emptyRDD(), out_schema
+            )
         reader = spark.read.format("binaryFile").load(paths)
     else:
         # pathGlobFilter = the listing-time twin of _list_log_files'
@@ -697,6 +703,8 @@ def read_binlog_envelope(
     cat = FIXTURE_CATALOG if catalog is None else catalog
 
     def decode_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         for pdf in batches:
             parts: dict[str, list] = {c: [] for c in out_cols}
             for fpath, content in zip(pdf["path"], pdf["content"]):

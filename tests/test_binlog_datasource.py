@@ -199,6 +199,42 @@ class TestBatch:
         )
         assert ds.count() == 0
 
+    def test_since_past_everything_envelope_is_jobless(
+        self, spark, fixture_dir
+    ):
+        """The binaryFile route's past-the-end resume builds its empty
+        envelope over an empty RDD: the narrowed schema, and no
+        partition for an action to schedule."""
+        cols = ["log_file", "offset", "op", "after"]
+        env = bs.read_binlog_envelope(
+            spark, fixture_dir, since=("binlog.999999", 4), columns=cols
+        )
+        assert env.schema == bs.narrowed_envelope_schema(
+            bs.normalize_envelope_columns(cols)
+        )
+        assert env.columns == cols
+        assert env.rdd.getNumPartitions() == 0
+        assert env.count() == 0
+
+    def test_source_runner_import_is_pandas_free(self):
+        """Spark's streaming-source runner imports this module in a
+        fresh interpreter per query; pandas (~0.3 s) must not ride
+        along — only the binaryFile decode needs it, on executors."""
+        import subprocess
+        import sys
+
+        root = pathlib.Path(__file__).resolve().parent.parent
+        out = subprocess.run(
+            [
+                sys.executable, "-c",
+                "import sys\n"
+                "import mysql_cdc_spark.sources.binlog_datasource\n"
+                "print('pandas' in sys.modules)",
+            ],
+            cwd=root, capture_output=True, text=True, check=True,
+        )
+        assert out.stdout.strip() == "False", out.stderr
+
 
 # ---------------------------------------------------------------------------
 # stream protocol (manual drive — deterministic, no Spark runtime)

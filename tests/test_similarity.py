@@ -374,3 +374,24 @@ def test_arrow_residual_codes_match_sql_subplan(spark):
         # cell 0 (lower label wins)
         assert not any(c == 1 for (_, c, _, _) in got_rows)
         assert any(v >= 100 and v < 200 and c == 0 for (v, c, _, _) in got_rows)
+
+
+def test_collected_centroids_leaves_no_cache_entry(spark, emb, monkeypatch):
+    """`_quantized_centroids` caches its frame for broadcast consumers;
+    the collecting consumer must drop that cache entry once it holds
+    the rows, or every residual/OPQ query pins a copy for the session."""
+    from mysql_cdc_spark.operators import similarity as S
+
+    built = []
+    make = S._quantized_centroids
+
+    def spy(e):
+        built.append(make(e))
+        return built[-1]
+
+    monkeypatch.setattr(S, "_quantized_centroids", spy)
+    labels, _, _ = S._collected_centroids(emb)
+    assert len(labels) == 3 and len(built) == 1
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(built[0]._jdf).isEmpty()
+    assert not built[0].storageLevel.useMemory

@@ -916,3 +916,143 @@ def test_image_version_pack_preserves_lexicographic_order():
         assert 0 <= pa < 1 << 63  # stays a positive int64
 
     check()
+
+
+class TestFirstMerge:
+    """A fresh table's first version is the batch's own aggregate: it
+    equals the MERGE into an empty snapshot row for row, and the write
+    plan carries no snapshot scan, no join and one merge-key shuffle."""
+
+    _KEYS = {"id": "bigint"}
+    _VALUES = {"v": "string", "n": "int"}
+
+    def _batch(self, spark, tmp_path):
+        """A typed MERGE batch read back from parquet (so its own scan
+        adds no RDD node to the plan): multi-row frames sharing one
+        offset, value updates, deletes (a freed key may be re-inserted),
+        and key-changing updates that envelope_to_typed_rows splits into a
+        delete + insert at the parent frame's offset."""
+        import random
+
+        from mysql_cdc_spark.operators.state_table import (
+            envelope_to_typed_rows,
+        )
+
+        rng = random.Random(20261017)
+        live: dict[int, dict] = {}
+        rows, pos = [], 4
+        for frame in range(60):
+            log_file = f"binlog.{frame // 30:06d}"
+            pos = 4 if frame == 30 else pos + 40
+            op = rng.choice(["write_rows"] * 2 + ["update_rows"] * 2
+                            + ["delete_rows"]) if live else "write_rows"
+            for row_idx in range(rng.randint(1, 3)):
+                if op != "write_rows" and not live:
+                    break  # one op per frame, as in a real log
+                if op == "write_rows":
+                    k = rng.choice([i for i in range(40) if i not in live])
+                    img = {"id": str(k), "v": f"w{frame}",
+                           "n": rng.choice([None, str(frame)])}
+                    live[k] = img
+                    rows.append((log_file, pos, "write_rows", "d", "t",
+                                 row_idx, None, img))
+                    continue
+                k = rng.choice(sorted(live))
+                before = live.pop(k)
+                if op == "delete_rows":
+                    rows.append((log_file, pos, op, "d", "t", row_idx,
+                                 before, None))
+                    continue
+                # about a third of the updates move the row to a free key
+                new_k = (
+                    rng.choice([i for i in range(40) if i not in live])
+                    if rng.random() < 0.34 else k
+                )
+                after = {"id": str(new_k), "v": f"u{frame}",
+                         "n": rng.choice([None, str(-frame)])}
+                live[new_k] = after
+                rows.append((log_file, pos, op, "d", "t", row_idx,
+                             before, after))
+        env = spark.createDataFrame(
+            rows,
+            "log_file string, offset bigint, op string, db string, "
+            "tbl string, row_idx bigint, before map<string,string>, "
+            "after map<string,string>",
+        )
+        path = str(tmp_path / "env")
+        env.write.parquet(path)
+        batch = envelope_to_typed_rows(
+            spark.read.parquet(path), self._KEYS, self._VALUES,
+            table=("d", "t"),
+        )
+        return batch, rows
+
+    def _state(self, tmp_path) -> StateTable:
+        return StateTable(
+            str(tmp_path / "state"), f"fm_{uuid.uuid4().hex[:8]}",
+            n_buckets=4, keys=tuple(self._KEYS),
+        )
+
+    def test_equals_merge_into_empty_snapshot(self, spark, tmp_path):
+        from mysql_cdc_spark.operators.aggregates import (
+            apply_changes_keep_tombstones,
+        )
+
+        batch, rows = self._batch(spark, tmp_path)
+        ops = {r[2] for r in rows}
+        assert ops == {"write_rows", "update_rows", "delete_rows"}
+        assert any(
+            r[2] == "update_rows" and r[6]["id"] != r[7]["id"] for r in rows
+        ), "batch must carry a key-changing update"
+        assert any(r[5] > 0 for r in rows), "batch must carry multi-row frames"
+
+        st = self._state(tmp_path)
+        assert st.merge_batch(batch, 0) is True
+        ptr = st.committed()
+        empty = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), ptr["schema_ddl"]
+        )
+        want = apply_changes_keep_tombstones(
+            empty, batch, tuple(self._KEYS), tuple(self._VALUES)
+        )
+        got = st.current_raw(spark)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+        assert got_rows == want_rows
+        assert any(r.is_deleted for r in got_rows), "no tombstone kept"
+        assert any(not r.is_deleted for r in got_rows)
+
+    def test_plan_has_no_snapshot_no_join_one_exchange(self, spark, tmp_path):
+        batch, _ = self._batch(spark, tmp_path)
+        st = self._state(tmp_path)
+        sc = spark.sparkContext
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def executions():
+            # the store keeps only the newest executions: select by id
+            execs = store.executionsList()
+            return [execs.apply(i) for i in range(execs.size())]
+
+        last_id = max((e.executionId() for e in executions()), default=-1)
+        group = f"first_merge_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "first merge")
+        try:
+            assert st.merge_batch(batch, 0) is True
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # one shuffle-map job for the delta repartition, one write job
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+        plans = [
+            e.physicalPlanDescription()
+            for e in executions() if e.executionId() > last_id
+        ]
+        writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        assert len(writes) == 1, plans
+        plan = writes[0]
+        final_tree = plan.split("== Initial Plan ==")[0]
+        assert "ExistingRDD" not in plan, plan
+        assert "Join" not in plan, plan
+        assert final_tree.count("Exchange") == 1, final_tree
+        assert "hashpartitioning(id" in plan, plan
