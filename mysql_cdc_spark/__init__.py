@@ -51,11 +51,15 @@ Layout:
         multimodal.py     — binary media columns through mapInPandas
         media_codecs.py   — pure-Python PNG / PCM-WAV codecs
     streaming/
-        runtime.py        — file-stream CDC source, checkpointed offsets,
-                            rotation, backpressure, blocking cursor,
-                            foreachBatch lifecycle, binlog event-log bridge
+        runtime.py        — file-stream CDC source over the events-table
+                            log, checkpointed offsets, rotation,
+                            backpressure, blocking cursor, foreachBatch
+                            lifecycle
         binlog_tailer.py  — incremental real-byte tail (cdc-turn loop)
-        stateful.py       — applyInPandasWithState latest-state reducer
+        push.py           — no-Spark push delivery + blocking cursors
+        stateful.py       — streaming transaction assembler
+                            (applyInPandasWithState, XID commit folding)
+        schema_state.py   — streaming per-table schema-version fold
         latency.py        — end-to-end CDC latency decomposition bench
 """
 

@@ -1075,7 +1075,7 @@ def ann_ivfpq_residual(
     spark = emb.sparkSession
     cents = spark.createDataFrame(
         [(int(l), [int(x) for x in cq], int(n)) for l, cq, n in zip(labels, Cq, Cn)],
-        "label int, cqv array<bigint>, ncq bigint",
+        "label bigint, cqv array<bigint>, ncq bigint",
     )
     cvec = cents.select(F.col("label").alias("cell"), "cqv")
     cb = spark.createDataFrame(
@@ -1405,7 +1405,7 @@ def ann_ivfpq_opq(
     spark = emb.sparkSession
     cents = spark.createDataFrame(
         [(int(l), [int(x) for x in cq], int(n)) for l, cq, n in zip(labels, Cq, Cn)],
-        "label int, cqv array<bigint>, ncq bigint",
+        "label bigint, cqv array<bigint>, ncq bigint",
     )
     cvec = cents.select(F.col("label").alias("cell"), "cqv")
     cb = spark.createDataFrame(

@@ -152,11 +152,9 @@ REGISTRATION_ORDER: list[str] = [
     "cdc_binlog_partial_json",
     "cdc_binlog_zstd",
     "cdc_binlog_typed_state",
-    "cdc_stream_latest_state",
     "cdc_binlog_tags_typed",
     "cdc_stream_sessions",
     "cdc_stream_dedup",
-    "cdc_binlog_stream",
     "cdc_binlog_enum_set",
     "cdc_binlog_wide_types",
     "cdc_binlog_utf8mb4",

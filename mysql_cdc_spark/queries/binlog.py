@@ -7,7 +7,6 @@ from mysql_cdc_spark.queries._shared import (  # noqa: E402
     _FIXTURE_VERSION,
     _STREAM_TMP,
     _drain,
-    _scratch_name,
 )
 
 
@@ -816,62 +815,6 @@ def cdc_binlog_tags_typed(spark, sf_dir):
         hex_le_to_long("flags").alias("flags_bits"),
         hex_le_to_long("perms").alias("perms_bits"),
     )
-
-
-@register("cdc_binlog_stream", _BINLOG_ORACLE)
-def cdc_binlog_stream(spark, sf_dir):
-    """The composed real-byte ingest path END-TO-END: byte binlog →
-    BinlogTailer incremental turns → parquet event-log appends →
-    file-stream source → memory sink.  Wires the reference's two
-    halves together (cdc-turn ingest, mysql_binlog.clj:907-919,
-    feeding the continuous query surface, jdbc.clj:164-185) and must
-    hash-match the same derivation done relationally — proving the
-    streaming composition loses/duplicates/reorders nothing."""
-    import pathlib
-    import shutil
-
-    from mysql_cdc_spark.sources import binlog_source as bs
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.binlog_tailer import BinlogTailer
-
-    binlog_dir = pathlib.Path(_STREAM_TMP) / f"binlog_{pathlib.Path(sf_dir).name}_v{_FIXTURE_VERSION}"
-    if not any(binlog_dir.glob("binlog.*")):
-        bs.generate_binlog_from_events(sf_dir, str(binlog_dir))
-    first_log = sorted(p.name for p in binlog_dir.glob("binlog.*"))[0]
-
-    scratch = pathlib.Path(_STREAM_TMP) / _scratch_name("blstream")
-    ev_dir = str(scratch / "event_log")
-    try:
-        tailer = BinlogTailer(
-            str(binlog_dir), first_log,
-            rt.binlog_event_log_fn(spark, ev_dir), bs.FIXTURE_CATALOG,
-        )
-        while tailer.turn():
-            pass  # drain every file (rotation chains follow automatically)
-        env = rt.open_binlog_stream(spark, ev_dir)
-        env = env.withColumn(
-            "seq",
-            F.regexp_extract("log_file", r"binlog\.(\d+)", 1).cast("bigint")
-            * (4 * bs.ROTATE_EVERY)
-            + F.col("seq"),
-        )
-        projected = env.select(
-            "seq", "op", "db", "tbl", "xid", "sql",
-            F.element_at("before", "id").cast("bigint").alias("before_id"),
-            F.element_at("before", "val").alias("before_val"),
-            F.element_at("before", "word").alias("before_word"),
-            F.element_at("after", "id").cast("bigint").alias("after_id"),
-            F.element_at("after", "val").alias("after_val"),
-            F.element_at("after", "word").alias("after_word"),
-            "thread_id", "exec_time", "error_code",
-        )
-        drained = _drain(projected)
-        # Materialize before removing the scratch source files: the
-        # memory sink already holds the rows; pin them via count().
-        drained.count()
-        return drained
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @register(

@@ -153,52 +153,6 @@ def cdc_stream_join(spark, sf_dir):
 
 
 @register(
-    "cdc_stream_latest_state",
-    with_changes(
-        "SELECT db, tbl, id, value, \"offset\" AS as_of_offset FROM ("
-        "  SELECT db, tbl, id, value, \"offset\", _delta_type, "
-        "         ROW_NUMBER() OVER (PARTITION BY db, tbl, id ORDER BY \"offset\" DESC) AS rn"
-        "  FROM rows_dt WHERE _delta_type <> 'update-before'"
-        ") WHERE rn = 1 AND _delta_type <> 'delete'"
-    ),
-)
-def cdc_stream_latest_state(spark, sf_dir):
-    """Latest-state replay as a CUSTOM STATEFUL streaming operator
-    (applyInPandasWithState, update mode): per-key (offset, value,
-    delta_type) state carried across micro-batches — forced through
-    FOUR batches (maxFilesPerTrigger=1) so state transfer is actually
-    exercised — then reduced to the final image per key.  Oracle: the
-    batch latest-state semantics.
-
-    ESCAPE HATCH, kept registered so the custom state-transfer path
-    stays driver-verified: the DEFAULT for these (aggregable)
-    semantics is the declarative twin `cdc_stream_latest_state_agg` —
-    the r12 state ramp measured this operator's per-group Python cost
-    LINEAR in key cardinality (30x the twin at 500k keys); policy
-    pinned by tests/test_registry.py
-    test_declarative_first_stateful_policy."""
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.stateful import latest_state_stateful
-
-    log_dir = rt.ensure_event_log(spark, sf_dir, _STREAM_TMP, _FIXTURE_VERSION)
-    stream = rt.open_stream(spark, log_dir, max_files_per_trigger=1)
-    updates = _drain(
-        latest_state_stateful(rows_delta_type(stream)), output_mode="update"
-    )
-    # The sink holds one update per (key, batch that touched it); the
-    # final image per key is the one with the highest offset.
-    return (
-        updates.groupBy("db", "tbl", "id")
-        .agg(
-            F.expr("max_by(struct(value, is_deleted), as_of_offset)").alias("last"),
-            F.max("as_of_offset").alias("as_of_offset"),
-        )
-        .filter(~F.col("last.is_deleted"))
-        .select("db", "tbl", "id", F.col("last.value").alias("value"), "as_of_offset")
-    )
-
-
-@register(
     "cdc_stream_latest_state_agg",
     with_changes(
         "SELECT db, tbl, id, value, \"offset\" AS as_of_offset FROM ("
@@ -209,20 +163,20 @@ def cdc_stream_latest_state(spark, sf_dir):
     ),
 )
 def cdc_stream_latest_state_agg(spark, sf_dir):
-    """The DECLARATIVE twin of cdc_stream_latest_state: the same
-    per-key latest-image semantics as a streaming groupBy
-    max_by(struct(...), offset) aggregation in update mode — all
-    JVM-side HashAggregate-with-state, zero Python in the hot path.
-    Same oracle, same four forced micro-batches.
+    """Streaming latest-state replay as a declarative aggregate: a
+    streaming groupBy max_by(struct(...), offset) in update mode,
+    forced through FOUR micro-batches (maxFilesPerTrigger=1) so state
+    transfer across batches is exercised — all JVM-side
+    HashAggregate-with-state, zero Python in the hot path.  Oracle:
+    the batch latest-state semantics.
 
-    Registered because the r12 state-scale ramp
-    (tools/state_scale.py, PLANS.md) measured the custom
-    applyInPandasWithState operator's per-group Python cost at
-    ~0.9 ms/key/batch — LINEAR in key cardinality (181 s at 500k
-    keys) while this form stays flat (5.9 s): at high cardinality
-    the escape hatch, not the state store, is the bottleneck, so the
-    declarative form is the default recommendation and the custom
-    operator is reserved for semantics aggregation cannot express."""
+    This is the one streaming latest-state path (durable tables use
+    `StateTable`'s foreachBatch MERGE).  The r12 state-scale ramp
+    (PLANS.md) measured the former applyInPandasWithState form's
+    per-group Python cost at ~0.9 ms/key/batch — LINEAR in key
+    cardinality (181 s at 500k keys) while this form stays flat
+    (5.9 s) — so custom Python state is reserved for semantics an
+    aggregate cannot express (streaming transaction assembly)."""
     from mysql_cdc_spark.streaming import runtime as rt
 
     log_dir = rt.ensure_event_log(spark, sf_dir, _STREAM_TMP, _FIXTURE_VERSION)
@@ -234,7 +188,7 @@ def cdc_stream_latest_state_agg(spark, sf_dir):
     )
     updates = _drain(agg, output_mode="update")
     # update-mode sink holds one row per (key, batch that advanced
-    # it); keep each key's highest-offset image, as in the custom form
+    # it); keep each key's highest-offset image
     return (
         updates.groupBy("db", "tbl", "id")
         .agg(

@@ -1877,88 +1877,16 @@ def _full_names(tmap: TableMapState) -> list[str]:
 
 def _make_field_decoder(tc: int, meta, unsigned: bool = False,
                         charset: str | None = None):
-    """Specialize the D9 field dispatch for ONE column — the
-    compile-time form of `_read_value`'s per-value type chain (r16
-    codec campaign): metadata re-derivation (packed-CHAR real type,
-    length-prefix width, decimal storage size) happens once per
-    (table map, bitmap) shape instead of once per value, and the hot
-    OLTP types (ints, strings, decimals) get closures with zero
-    per-call branching.  Every other type falls back to `_read_value`
-    itself — one semantics, two speeds."""
-    if tc == TYPE_STRING and isinstance(meta, tuple):
-        m0, m1 = meta
-        if m0 == TYPE_ENUM:
-            def d_enum(body, pos, n=m1):
-                e = pos + n
-                return int.from_bytes(body[pos:e], "little"), e
-            return d_enum
-        if m0 == TYPE_SET:
-            def d_set(body, pos, n=m1):
-                e = pos + n
-                return bytes(body[pos:e]), e
-            return d_set
-        if m0 and (m0 & 0x30) != 0x30:
-            maxlen = m1 | (((m0 & 0x30) ^ 0x30) << 4)
-        else:
-            maxlen = m1
-        tc, meta = TYPE_VAR_STRING, maxlen
-    if tc in _INT_TYPES:
-        n = _INT_TYPES[tc]
-        signed = not unsigned
-        def d_int(body, pos, n=n, signed=signed):
-            e = pos + n
-            return int.from_bytes(body[pos:e], "little", signed=signed), e
-        return d_int
-    if tc in (TYPE_VARCHAR, TYPE_VAR_STRING):
-        if int(meta) < 256:
-            if charset is None:
-                def d_str1(body, pos):
-                    s = pos + 1
-                    e = s + body[pos]
-                    return body[s:e].decode("latin-1"), e
-                return d_str1
-            def d_str1c(body, pos, cs=charset):
-                s = pos + 1
-                e = s + body[pos]
-                return _decode_text(body[s:e], cs), e
-            return d_str1c
-        if charset is None:
-            def d_str2(body, pos):
-                s = pos + 2
-                e = s + (body[pos] | (body[pos + 1] << 8))
-                return body[s:e].decode("latin-1"), e
-            return d_str2
-        def d_str2c(body, pos, cs=charset):
-            s = pos + 2
-            e = s + (body[pos] | (body[pos + 1] << 8))
-            return _decode_text(body[s:e], cs), e
-        return d_str2c
-    if tc == TYPE_NEWDECIMAL:
-        p_, s_ = meta
-        size = decimal_bin_size(p_, s_)
-        # Value memo (r19): an OLTP decimal column carries few distinct
-        # values relative to row count (prices, rates), and the packed
-        # bytes → canonical string decode is pure — so intern decoded
-        # values keyed by the exact packed bytes, bounded like the
-        # table-map memo.  decode_decimal profiled as the single
-        # hottest codec function (2.7 µs/value); a hit is one dict
-        # lookup (~0.1 µs).  The memo lives per specialized decoder
-        # (per table-map shape × column), each capped at 4096 entries.
-        memo: dict[bytes, str] = {}
-        def d_dec(body, pos, size=size, p=p_, s=s_, memo=memo):
-            e = pos + size
-            key = body[pos:e]
-            v = memo.get(key)
-            if v is None:
-                if len(memo) >= 4096:
-                    memo.clear()
-                v = memo[key] = decode_decimal(key, p, s)
-            return v, e
-        return d_dec
-    def d_generic(body, pos, tc=tc, meta=meta, unsigned=unsigned,
-                  charset=charset):
+    """``(body, pos) -> (value, new_pos)`` for ONE column: `_read_value`
+    with the column's type metadata bound.  The compiled image plans
+    (`_compile_image_plan`) inline the hot OLTP types and call this
+    closure for every other type; it is also the interpreted reference
+    the compiled plans are pinned against (tests/test_compiled_image_
+    plan.py) — one semantics, two speeds."""
+    def d_value(body, pos, tc=tc, meta=meta, unsigned=unsigned,
+                charset=charset):
         return _read_value(body, pos, tc, meta, unsigned, charset)
-    return d_generic
+    return d_value
 
 
 def _field_inline_src(i: int, tc: int, meta, unsigned: bool,
@@ -1966,11 +1894,11 @@ def _field_inline_src(i: int, tc: int, meta, unsigned: bool,
                       stringify: bool = False) -> list[str] | None:
     """Source lines decoding column i inline inside the compiled image
     decoder (`_compile_image_plan`), or None to fall back to a
-    `_make_field_decoder` closure call.  Covers exactly the hot OLTP
-    types the closures specialize (ints, length-prefixed strings,
-    packed CHAR, ENUM/SET, memoized NEWDECIMAL) and MUST stay value-
-    and width-identical to them (pinned by
-    test_binlog_codec parity + the codec property fuzz).
+    `_make_field_decoder` closure call.  Covers the hot OLTP types
+    (ints, length-prefixed strings, packed CHAR, ENUM/SET, memoized
+    NEWDECIMAL) and MUST stay value- and width-identical to
+    `_read_value` (pinned by tests/test_compiled_image_plan.py + the
+    codec property fuzz).
 
     ``stringify=True`` emits the MAP-envelope string form directly
     (`stringify_image` semantics fused into the decode: int → str,
@@ -2018,7 +1946,11 @@ def _field_inline_src(i: int, tc: int, meta, unsigned: bool,
     if tc == TYPE_NEWDECIMAL:
         p_, s_ = meta
         size = decimal_bin_size(p_, s_)
-        env[f"m{i}"] = {}  # per-shape bounded value memo (see d_dec)
+        # Per-shape bounded value memo: an OLTP decimal column carries
+        # few distinct values relative to row count, and the packed
+        # bytes → canonical string decode (2.7 µs/value, the hottest
+        # codec function in profile) is pure; a hit is one dict lookup.
+        env[f"m{i}"] = {}
         return [f"e = pos + {size}",
                 f"k = body[pos:e]",
                 f"v{i} = m{i}.get(k)",
@@ -2038,8 +1970,8 @@ def _compile_image_plan(specs: list, null_bytes: int,
     a (name, decoder) tuple unpack + closure call + (value, pos) tuple
     allocation + dict __setitem__ per column — 42 % of the codec wall
     in the bench profile.  The generated source decodes hot types
-    inline (no call, no tuple), falls back to the existing specialized
-    closures for everything else (one semantics), and builds the image
+    inline (no call, no tuple), falls back to the `_make_field_decoder`
+    closure for everything else (one semantics), and builds the image
     as a single dict display.  NULL-bitmap semantics unchanged: bit j
     set → key present with None; column-not-in-image → key absent
     (specs already restricted to the used bitmap).
@@ -2130,31 +2062,14 @@ def stringify_image(image: dict | None) -> dict | None:
     the reference keeps byte[], mysql_binlog.clj:530-531), everything
     else → str.  The compiled string-mode plans fuse this into the
     decode; this standalone form serves the paths that must decode
-    typed first (partial-update diffs, the streaming record bridge)."""
+    typed first (partial-update diffs, `envelope_records` over typed
+    events)."""
     if image is None:
         return None
     return {
         k: (None if v is None else (v.hex() if isinstance(v, bytes) else str(v)))
         for k, v in image.items()
     }
-
-
-def _read_image(
-    body: bytes, pos: int, tmap: TableMapState, used_bitmap: bytes
-) -> tuple[dict, int]:
-    """One row image → {col_name: value}; SQL NULL → key with None,
-    column-not-in-image → key ABSENT (nil vs '_', reference :599-608).
-    Decodes through the compiled per-shape plan (`_image_plan`); the
-    null bitmap reads once as an int so the per-column test is a
-    shift, not a byte index + mask."""
-    return _image_plan(tmap, used_bitmap)(body, pos)
-
-
-def _read_image_plan(body: bytes, pos: int, plan) -> tuple[dict, int]:
-    """`_read_image` with the plan lookup hoisted — `_decode_body`
-    resolves the plan once per EVENT and decodes every row image in
-    the event through it."""
-    return plan(body, pos)
 
 
 def _make_field_skipper(tc: int, meta):

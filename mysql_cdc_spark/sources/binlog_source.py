@@ -56,6 +56,7 @@ from mysql_cdc_spark.sources.binlog_codec import (
     BinlogWriter,
     TableDef,
     decode_binlog,
+    stringify_image,
 )
 
 if TYPE_CHECKING:
@@ -172,18 +173,6 @@ _ENVELOPE_OPS = (
 )
 
 
-def _stringify(image: dict | None) -> dict | None:
-    # SET columns decode to raw bitset bytes (reference keeps byte[],
-    # mysql_binlog.clj:530-531); the MAP envelope carries them as
-    # lowercase hex so the payload stays a string map.
-    if image is None:
-        return None
-    return {
-        k: (None if v is None else (v.hex() if isinstance(v, bytes) else str(v)))
-        for k, v in image.items()
-    }
-
-
 def _IDENTITY(image):
     # stringified=True fast path: the codec already emitted the string
     # form (decode_binlog(..., stringify=True)); nothing to re-walk
@@ -200,7 +189,8 @@ def envelope_records(
     image pair; non-row events emit one record).  Returns (records,
     next_seq) so callers that deliver a file's events across several
     batches — the incremental tailer — keep per-file seq continuity.
-    Shared by the batch binaryFile path and the streaming bridge.
+    The push delivery's record form; the Spark scans use its columnar
+    twin `envelope_columns`.
 
     ``only_tables`` drops row-event records for tables outside the set
     (non-row events always pass).  This is the record-level half of the
@@ -208,7 +198,7 @@ def envelope_records(
     the same set to `decode_binlog(..., only_tables=...)` so skipped
     tables never pay image parsing; passing it here as well keeps the
     envelope correct for callers that receive pre-decoded events (the
-    streaming tailer bridge).  ``only_ops`` is the same record-level
+    push delivery's tailer).  ``only_ops`` is the same record-level
     half for the delta-type pushdown (r16): row-event records whose op
     is outside the set drop; non-row events always pass.  Envelope
     ``seq`` numbers DELIVERED records — under pushdown it is not
@@ -217,10 +207,10 @@ def envelope_records(
 
     ``stringified=True`` asserts the caller decoded with
     ``decode_binlog(..., stringify=True)`` — images are already in the
-    MAP-envelope string form, so the per-image `_stringify` walk is
+    MAP-envelope string form, so the per-image `stringify_image` walk is
     skipped (r19 §4: one dict build per image, not two).
     """
-    sfy = _IDENTITY if stringified else _stringify
+    sfy = _IDENTITY if stringified else stringify_image
     out: list[dict] = []
     seq = seq_start
     for ev in events:
@@ -286,7 +276,7 @@ def envelope_columns(
     builds the mapInPandas batch from dict-of-lists (a C-speed column
     zip) instead of re-inferring a list-of-dicts.  Content parity
     with `envelope_records` is pinned by test; the record form stays
-    for the streaming tailer bridge (per-event callbacks).
+    for the push delivery (per-event callbacks).
 
     ``frame_seq=True`` switches `seq` from delivered-record numbering
     to the codec's FRAME index (each event's position in the walk,
@@ -298,7 +288,7 @@ def envelope_columns(
 
     ``stringified=True``: see `envelope_records` — images arrived
     pre-stringified from ``decode_binlog(..., stringify=True)``."""
-    sfy = _IDENTITY if stringified else _stringify
+    sfy = _IDENTITY if stringified else stringify_image
     cols: dict[str, list] = {c: [] for c in _ENVELOPE_COLS}
     (c_log, c_seq, c_off, c_ts, c_sid, c_xid, c_db, c_tbl, c_op, c_ri,
      c_before, c_after, c_sql, c_tid, c_et, c_ec) = (

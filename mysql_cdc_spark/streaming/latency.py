@@ -11,21 +11,25 @@ Here the same three modes over the rebuilt stack:
 
   write  — append one transaction of real binlog bytes to a growing
            log file (the "raw DB update" half)
-  decode — append + one BinlogTailer.turn() with a no-op event_fn
-           (the "plain read" half: seek + incremental decode)
-  full   — append + turn() feeding the parquet event-log + a RUNNING
-           continuous query (file-stream source → foreachBatch sink);
-           the turn ends when the new rows are visible at the sink
+  decode — append + one BinlogTailer.turn() with an event_fn that only
+           keeps the events (the "plain read" half: seek + incremental
+           decode)
+  full   — append to the `binlog.000001` of a RUNNING
+           `spark.readStream.format("mysql_binlog")` query (checkpointed
+           frame-aligned offsets → foreachBatch sink); the turn ends
+           when that transaction's xid reaches the sink
 
 so `net = full − write − decode` isolates the streaming delivery
-layer: parquet append + source discovery + micro-batch schedule +
-sink visibility.  All three run the same per-turn transaction shape
-(QUERY + TABLE_MAP + WRITE_ROWS + XID — the reference's 4-event
-statement, :248-249).
+layer: the source's walk of the new bytes + micro-batch schedule +
+executor decode + sink visibility.  All three run the same per-turn
+transaction shape (QUERY + TABLE_MAP + WRITE_ROWS + XID — the
+reference's 4-event statement, :248-249).  Every mode must see every
+turn: a turn that never arrives raises instead of being averaged in.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -45,7 +49,7 @@ from mysql_cdc_spark.streaming.binlog_tailer import BinlogTailer
 
 _T = TableDef("foo", "auto", [(TYPE_LONG, None), (TYPE_NEWDECIMAL, (12, 4)), (TYPE_VARCHAR, 50)])
 _CAT = {("foo", "auto"): ["id", "val", "word"]}
-_EVENTS_PER_TURN = 4  # query + table_map + write_rows + xid
+_CAT_JSON = json.dumps({f"{db}.{tbl}": cols for (db, tbl), cols in _CAT.items()})
 
 
 class _GrowingLog:
@@ -94,53 +98,59 @@ def measure_latency(
 
         # --- write + incremental decode (binlog4 analog) -------------
         log = _GrowingLog(os.path.join(scratch, "logs", "d.bin"))
-        tailer = BinlogTailer(os.path.join(scratch, "logs"), "d.bin", lambda b: None, _CAT)
+        decoded: list[dict] = []
+        tailer = BinlogTailer(os.path.join(scratch, "logs"), "d.bin", decoded.extend, _CAT)
         tailer.turn()  # consume the FDE/preamble outside the timed loop
         t0 = time.perf_counter()
         for i in range(turns):
             log.append_txn(i)
             tailer.turn()
         t_decode = time.perf_counter() - t0
+        n_xid = sum(1 for ev in decoded if ev["op"] == "xid")
+        if n_xid != turns:
+            raise RuntimeError(f"decode mode saw {n_xid}/{turns} commits")
 
         # --- full path (binlog2 analog) ------------------------------
-        from mysql_cdc_spark.streaming import runtime as rt
+        # ONE running mysql_binlog stream over the mode's own log
+        # directory; per turn we wait until the sink has seen the xid.
+        from mysql_cdc_spark.sources.binlog_datasource import register_binlog_source
 
-        ev_dir = os.path.join(scratch, "event_log")
-        log = _GrowingLog(os.path.join(scratch, "logs", "f.bin"))
-        tailer = BinlogTailer(
-            os.path.join(scratch, "logs"), "f.bin",
-            rt.binlog_event_log_fn(spark, ev_dir), _CAT,
-        )
-        # Materialize the (empty-but-typed) event log dir, then start
-        # ONE continuous query; per turn we wait for sink visibility.
-        seen = {"rows": 0}
+        register_binlog_source(spark)
+        full_dir = os.path.join(scratch, "full")
+        os.makedirs(full_dir)
+        log = _GrowingLog(os.path.join(full_dir, "binlog.000001"))
+        seen: set[int] = set()
 
-        def count_rows(batch_df, batch_id) -> None:
-            seen["rows"] += batch_df.count()
+        def on_batch(batch_df, batch_id) -> None:
+            seen.update(r["xid"] for r in batch_df.collect() if r["op"] == "xid")
 
-        tailer.turn()
-        os.makedirs(ev_dir, exist_ok=True)  # preamble delivers no events
+        def await_xid(xid: int) -> None:
+            deadline = time.monotonic() + timeout
+            while xid not in seen:
+                if not query.isActive:
+                    raise RuntimeError(f"stream stopped: {query.exception()}")
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"sink never saw xid {xid} after {timeout}s")
+                time.sleep(0.01)
+
         query = (
-            rt.open_binlog_stream(spark, ev_dir)
-            .writeStream.foreachBatch(count_rows)
+            spark.readStream.format("mysql_binlog")
+            .option("catalog", _CAT_JSON)
+            .load(full_dir)
+            .writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", os.path.join(scratch, "cp"))
             .trigger(processingTime=f"{trigger_seconds} seconds")
             .start()
         )
         try:
+            # one untimed turn: query start, first planning walk and
+            # Python worker launch stay outside the timed loop
+            log.append_txn(turns)
+            await_xid(turns)
             t0 = time.perf_counter()
-            expected = 0
             for i in range(turns):
                 log.append_txn(i)
-                tailer.turn()
-                expected += _EVENTS_PER_TURN
-                deadline = time.monotonic() + timeout
-                while seen["rows"] < expected:
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"sink saw {seen['rows']}/{expected} rows after {timeout}s"
-                        )
-                    time.sleep(0.01)
+                await_xid(i)
             t_full = time.perf_counter() - t0
         finally:
             query.stop()

@@ -176,79 +176,6 @@ def run_to_memory(
     return transformed.sparkSession.table(sink_name)
 
 
-def binlog_event_log_fn(spark: SparkSession, out_dir: str):
-    """The composed real-byte ingest path's write half: an `event_fn`
-    for `BinlogTailer` that appends each delivered batch to a parquet
-    event-log directory, which `open_binlog_stream` then consumes as a
-    file-stream source.  Together these wire the reference's two halves
-    end-to-end: mmap-tail ingest (cdc-turn) feeding the continuous
-    query surface (jdbc.clj) — tailer → event-log → stream → sink.
-
-    Per-file seq continuity is kept across turns (a tailer delivers a
-    growing file's events over many batches); each append commits
-    atomically via Spark's parquet protocol, so the stream source never
-    observes a torn file — the file-level analog of the byte-level
-    torn-tail guard.
-    """
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from mysql_cdc_spark.sources.binlog_source import envelope_records
-
-    _s, _l = pa.string(), pa.int64()
-    _m = pa.map_(pa.string(), pa.string())
-    arrow_schema = pa.schema(
-        [
-            ("log_file", _s), ("seq", _l), ("offset", _l), ("ts", _l),
-            ("server_id", _l), ("xid", _l), ("db", _s), ("tbl", _s),
-            ("op", _s), ("row_idx", _l), ("before", _m), ("after", _m),
-            ("sql", _s), ("thread_id", _l), ("exec_time", _l),
-            ("error_code", _l),
-        ]
-    )
-    seqs: dict[str, int] = {}
-
-    def event_fn(batch: list[dict]) -> None:
-        records: list[dict] = []
-        for ev in batch:
-            lf = ev.get("log_file", "binlog")
-            recs, seqs[lf] = envelope_records([ev], lf, seqs.get(lf, 0))
-            records.extend(recs)
-        if not records:
-            return
-        # Direct pyarrow write + atomic rename: a per-batch Spark write
-        # job costs hundreds of ms for a handful of rows — 10-20× the
-        # actual delivery latency.  The rename keeps the commit atomic
-        # (the stream source never lists a half-written file), matching
-        # Spark's own file-commit protocol.
-        os.makedirs(out_dir, exist_ok=True)
-        table = pa.Table.from_pylist(records, schema=arrow_schema)
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(out_dir, f".{name}.tmp")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(out_dir, name))
-
-    return event_fn
-
-
-def open_binlog_stream(
-    spark: SparkSession,
-    log_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """The byte-decoded envelope as a streaming DataFrame (MAP-payload
-    schema) over a tailer-fed event-log directory."""
-    from mysql_cdc_spark.sources.binlog_source import BINLOG_ENVELOPE_SCHEMA
-
-    reader = spark.readStream.schema(BINLOG_ENVELOPE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(log_dir)
-
-
 def idempotent_parquet_sink(out_dir: str):
     """Exactly-once delivery from an at-least-once stream: an event_fn
     for `foreachBatch` that writes each micro-batch to a path keyed by

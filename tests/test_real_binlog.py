@@ -491,9 +491,7 @@ def test_real_format_zstd_payload_and_partial_json():
 # documents the blocker; re-searched and re-confirmed r11/r12/r13/r14/
 # r15/r16 — `which mysqld mariadbd`, /usr/sbin, a filesystem sweep for
 # mysql-bin.*/binlog.0* outside repo scratch dirs, and a DNS probe to
-# dev.mysql.com (Name or service not known) all come up empty; the
-# r16 probe also re-confirmed google.protobuf absent, so the
-# transformWithState twin stays gated on tws_available()).
+# dev.mysql.com (Name or service not known) all come up empty).
 # r14 adds tests/test_golden_vectors.py: spec-derived byte-LITERAL
 # fixtures (no encoder at all, not even the independent one above)
 # as the strongest offline substitute.  The FULL 94-byte FDE body is NOT embedded:

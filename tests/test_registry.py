@@ -358,20 +358,15 @@ def test_declarative_first_stateful_policy():
         name for name, fn in QUERIES.items() if pattern.search(code_only(fn))
     }
 
-    # The exact allowed set.  Both entries exist to keep the custom
+    # The exact allowed set.  Each entry keeps the custom
     # state-transfer capability itself driver-verified (SURVEY §2.6
-    # streaming checklist rows) — semantics here ARE aggregable, and
-    # each docstring routes readers to the declarative default.  The
-    # legitimate future reasons to extend this list are semantics
-    # aggregation cannot express: event-driven TIMEOUTS (state expiry
-    # emitting rows with no triggering input) and custom gap/session
-    # logic beyond F.session_window.
+    # streaming checklist rows).  The legitimate reasons to extend
+    # this list are semantics aggregation cannot express: event-driven
+    # TIMEOUTS (state expiry emitting rows with no triggering input)
+    # and custom gap/session logic beyond F.session_window.
     allowed = {
-        # escape-hatch demonstration; declarative twin
-        # cdc_stream_latest_state_agg is the documented default
-        "cdc_stream_latest_state",
         # incremental DDL fold kept as the multi-batch state-transfer
-        # proof over a second state shape (per-key dict)
+        # proof over a per-key dict state shape
         "cdc_stream_schema_version",
         # transaction assembly (r14 VERDICT #2): commit-boundary
         # folding in offset order with gap holdback and EVENT-TIME
@@ -394,9 +389,3 @@ def test_declarative_first_stateful_policy():
         "state ramp, 30x at 500k keys)"
     )
 
-    # Each allowed query must point at its declarative guidance
-    assert "cdc_stream_latest_state_agg" in QUERIES
-    doc = QUERIES["cdc_stream_latest_state"].__doc__ or ""
-    assert "cdc_stream_latest_state_agg" in doc, (
-        "the escape-hatch query must route readers to its declarative twin"
-    )

@@ -395,3 +395,24 @@ def test_collected_centroids_leaves_no_cache_entry(spark, emb, monkeypatch):
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.lookupCachedData(built[0]._jdf).isEmpty()
     assert not built[0].storageLevel.useMemory
+
+
+@pytest.mark.parametrize("op", ["ann_ivfpq_residual", "ann_ivfpq_opq"])
+def test_ivfpq_centroid_frame_carries_int64_labels(spark, op):
+    """`_collected_centroids` holds int64 labels, so the centroid frame
+    rebuilt from them must declare `label bigint`: a label of 2^31 or
+    more used to fail the frame's INT schema.  Shifting every label by
+    2^31 keeps their order (the cell tie rule), so the result must
+    equal the small-label run row for row."""
+    from mysql_cdc_spark.operators import similarity as S
+
+    schema = "vec_id long, embedding array<float>, label bigint"
+    rows = [(i, _vec(i), i % 3) for i in range(40)]
+    small = spark.createDataFrame(rows, schema)
+    big = spark.createDataFrame([(v, e, lbl + 2**31) for v, e, lbl in rows], schema)
+    kw = {"rotation_int": S.fixed_rotation_int()} if op == "ann_ivfpq_opq" else {}
+    fn = getattr(S, op)
+    want = sorted(map(tuple, fn(small, n_queries=4, k=3, **kw).collect()))
+    got = sorted(map(tuple, fn(big, n_queries=4, k=3, **kw).collect()))
+    assert len(want) == 4 * 3
+    assert got == want

@@ -287,127 +287,6 @@ def test_idempotent_sink_end_to_end(spark, sf_dir, scratch):
     assert got.count() == 2000
 
 
-def test_tailer_to_stream_incremental(spark):
-    """Composed real-byte path with a GROWING log: tailer turns append
-    to the parquet event-log between micro-batch drains; the stream
-    picks up exactly the new events each time (no loss, no dupes)."""
-    import os
-    import shutil
-    import uuid
-
-    from mysql_cdc_spark.sources.binlog_codec import (
-        TYPE_LONG,
-        TYPE_NEWDECIMAL,
-        TYPE_VARCHAR,
-        WRITE_ROWS_EVENT,
-        BinlogWriter,
-        TableDef,
-    )
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.binlog_tailer import BinlogTailer
-
-    t3 = TableDef("foo", "auto", [(TYPE_LONG, None), (TYPE_NEWDECIMAL, (12, 4)), (TYPE_VARCHAR, 50)])
-    cat = {("foo", "auto"): ["id", "val", "word"]}
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
-    log_dir = f"{scratch}/logs"
-    ev_dir = f"{scratch}/event_log"
-    cp = f"{scratch}/cp"
-    os.makedirs(log_dir, exist_ok=True)
-    try:
-        w = BinlogWriter()
-        w.write_table_map(t3)
-        w.write_rows(WRITE_ROWS_EVENT, t3, [[1, "1.0000", "a"]])
-        w.write_xid(1)
-        with open(f"{log_dir}/binlog.000001", "wb") as fh:
-            fh.write(w.getvalue())
-
-        tailer = BinlogTailer(log_dir, "binlog.000001", rt.binlog_event_log_fn(spark, ev_dir), cat)
-        assert tailer.turn() == 3
-
-        out_dir = f"{scratch}/out"
-
-        def drain() -> None:
-            run = rt.CDCRuntime(
-                rt.open_binlog_stream(spark, ev_dir),
-                rt.idempotent_parquet_sink(out_dir),
-                cp,
-            ).start()
-            run.await_termination()
-
-        drain()
-        assert spark.read.parquet(out_dir).count() == 3
-
-        # the log grows; a later turn appends ONLY the new events and
-        # the checkpointed stream (foreachBatch recovers from cp)
-        # drains just those into a new batch_id partition
-        w.write_rows(WRITE_ROWS_EVENT, t3, [[2, "2.0000", "b"]])
-        w.write_xid(2)
-        with open(f"{log_dir}/binlog.000001", "wb") as fh:
-            fh.write(w.getvalue())
-        assert tailer.turn() == 2
-        drain()
-        rows = spark.read.parquet(out_dir).collect()
-        assert len(rows) == 5
-        got = {(r["op"], r["seq"]) for r in rows}
-        assert ("write_rows", 3) in got and ("xid", 4) in got  # seq continuity
-        assert {r["batch_id"] for r in rows} == {0, 1}         # incremental drains
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-def test_stateful_latest_state_across_batches(spark):
-    """applyInPandasWithState carries per-key state across micro-batches:
-    with one file per trigger, a key updated in a later file must beat
-    its earlier image via STATE, and each touching batch emits an
-    update row."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_spark.model import ENVELOPE_SCHEMA
-    from mysql_cdc_spark.sources.events_cdc import rows_delta_type
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.stateful import latest_state_stateful
-
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
-    log_dir = f"{scratch}/log"
-
-    from datetime import datetime
-
-    def env_row(offset, op, rid, val):
-        return (offset, "binlog.000000", datetime(2024, 1, 1), 1, None, "foo", "auto", op,
-                rid if op != "write_rows" else None,
-                val - 1.0 if op == "update_rows" else None,
-                rid, val, None)
-
-    try:
-        rows1 = [env_row(0, "write_rows", 1, 10.0), env_row(4, "write_rows", 2, 20.0)]
-        rows2 = [env_row(8, "update_rows", 1, 99.0)]
-        for i, rows in enumerate([rows1, rows2]):
-            spark.createDataFrame(rows, ENVELOPE_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(log_dir)
-
-        stream = rt.open_stream(spark, log_dir, max_files_per_trigger=1)
-        sink = f"st_{uuid.uuid4().hex[:8]}"
-        out = rt.run_to_memory(
-            latest_state_stateful(rows_delta_type(stream)),
-            sink, f"{scratch}/cp", output_mode="update",
-        )
-        rows = out.orderBy("id", "as_of_offset").collect()
-        by_key = {}
-        for r in rows:
-            by_key.setdefault(r["id"], []).append((r["as_of_offset"], r["value"]))
-        # key 1: initial insert (offset 0) then the update's after-image
-        # (offset 9 = update tag offset) must win THROUGH state
-        assert by_key[1][-1][1] == 99.0
-        assert len(by_key[1]) >= 2          # one update row per touching batch
-        assert by_key[2] == [(4, 20.0)]
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
 def test_dedup_within_watermark_bounded_state(spark):
     """The bounded-state variant of streaming dedup:
     dropDuplicatesWithinWatermark keeps offsets only within the
@@ -453,9 +332,10 @@ def test_stateful_queries_green_on_rocksdb_state_store(spark, sf_dir):
     """r10 VERDICT #8: the default HDFS-backed state store keeps every
     key's state ON-HEAP in the executor — at 100-TB key cardinality the
     state must spill off-heap/disk, which is exactly what the bundled
-    RocksDB provider does (rocksdbjni ships in the pyspark jars).  Both
-    stateful registry queries must produce IDENTICAL rows under
-    RocksDB as under the default provider."""
+    RocksDB provider does (rocksdbjni ships in the pyspark jars).  Each
+    stateful registry query below — the declarative aggregate too, whose
+    JVM-side state lives in the same store — must produce IDENTICAL
+    rows under RocksDB as under the default provider."""
     from mysql_cdc_spark.queries import QUERIES
 
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -464,7 +344,7 @@ def test_stateful_queries_green_on_rocksdb_state_store(spark, sf_dir):
         "RocksDBStateStoreProvider"
     )
     names = [
-        "cdc_stream_latest_state",
+        "cdc_stream_latest_state_agg",
         "cdc_stream_schema_version",
         # r15: the transaction assembler carries array-valued state
         # (holdback buffers) and EVENT-TIME timers — both must
@@ -573,231 +453,6 @@ def test_txn_assembly_watermark_gc_and_reorder(spark):
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-def test_txn_assembly_transformwithstate_twin(spark):
-    """The transformWithStateInPandas form of the transaction
-    assembler (MapState holdback, engine-managed event-time timers)
-    must reproduce the applyInPandasWithState form's output on the
-    same two-batch log — including the abandoned-partial GC and the
-    cross-batch gap fill — and terminate its availableNow drain.
-
-    SKIPS where the environment cannot run transformWithState at all:
-    its Python driver worker imports google.protobuf, which this
-    container's pyspark install does not ship (measured:
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE / ImportError) —
-    the guard is an environment capability probe, not a soft-pass."""
-    import shutil
-    import uuid
-    from datetime import datetime, timedelta
-
-    from mysql_cdc_spark.model import ENVELOPE_SCHEMA
-    from mysql_cdc_spark.streaming import runtime as rt
-    from mysql_cdc_spark.streaming.stateful import (
-        tws_available,
-        txn_events_stateful,
-        txn_events_tws,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithStateInPandas unavailable: pyspark's TWS "
-            "python worker needs google.protobuf, absent here"
-        )
-
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
-    log_dir = f"{scratch}/log"
-    t0 = datetime(2024, 1, 1)
-
-    def ev(log, offset, op, ts, xid=None):
-        return (offset, log, ts, 1, xid, "foo", "auto", op,
-                None, None, None, None, None)
-
-    rows1 = [
-        ev("A", 0, "query", t0), ev("A", 1, "table_map", t0),
-        ev("A", 2, "write_rows", t0),
-        ev("C", 0, "query", t0), ev("C", 2, "update_rows", t0),
-        ev("C", 3, "xid", t0, xid=77),
-    ]
-    rows2 = [
-        ev("C", 1, "table_map", t0 + timedelta(seconds=1)),
-        ev("B", 0, "query", t0 + timedelta(days=30)),
-        ev("B", 1, "write_rows", t0 + timedelta(days=30)),
-        ev("B", 2, "xid", t0 + timedelta(days=30), xid=88),
-    ]
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = ("org.apache.spark.sql.execution.streaming.state."
-             "RocksDBStateStoreProvider")
-    try:
-        default = spark.conf.get(key)
-    except Exception:
-        default = None
-    try:
-        for rows in (rows1, rows2):
-            spark.createDataFrame(rows, ENVELOPE_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(log_dir)
-        spark.conf.set(key, rocks)  # transformWithState requires RocksDB
-
-        def drain(factory, cp_tag):
-            stream = rt.open_stream(spark, log_dir, max_files_per_trigger=1)
-            asm = factory(stream, gc_gap_ms=60_000, watermark_delay="0 seconds")
-            sink = f"tws_{uuid.uuid4().hex[:8]}"
-            q = (
-                asm.writeStream.format("memory").queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", f"{scratch}/cp_{cp_tag}")
-                .trigger(availableNow=True).start()
-            )
-            assert q.awaitTermination(240), "drain did not terminate"
-            return sorted(
-                map(tuple, spark.sql(f"SELECT * FROM {sink}").collect())
-            )
-
-        got_tws = drain(txn_events_tws, "tws")
-        got_apw = drain(txn_events_stateful, "apw")
-        assert got_tws == got_apw, (got_tws, got_apw)
-        by_log = {r[0]: r for r in got_tws}
-        assert by_log["C"][1] == 4 and by_log["C"][4] == 77
-        assert by_log["B"][4] == 88
-        assert "A" not in by_log            # abandoned partial GC'd
-    finally:
-        if default is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, default)
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# r16 (r15 ADVICE, medium): the transformWithState twin must REPLACE
-# its abandonment timer each batch, not accumulate timers — a stale
-# timer from an older batch expiring while the transaction is still
-# open would fire handleExpiredTimer and clear live cursor+buf
-# mid-transaction (wrong/partial commits).  transformWithState itself
-# is env-blocked (protobuf), so the processor is driven directly with
-# duck-typed fakes of the public ValueState/MapState/handle API —
-# the timer discipline is pure processor logic, not engine logic.
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeMapState:
-    def __init__(self):
-        self._m = {}
-
-    def containsKey(self, k):
-        return k in self._m
-
-    def getValue(self, k):
-        return self._m[k]
-
-    def removeKey(self, k):
-        self._m.pop(k)
-
-    def updateValue(self, k, v):
-        self._m[k] = v
-
-    def keys(self):
-        return iter(list(self._m.keys()))
-
-    def exists(self):
-        return bool(self._m)
-
-    def clear(self):
-        self._m.clear()
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.timers = []
-
-    def getValueState(self, name, schema):
-        return _FakeValueState()
-
-    def getMapState(self, name, kschema, vschema):
-        return _FakeMapState()
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.remove(ts)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-class _FakeTimerValues:
-    def __init__(self, wm):
-        self._wm = wm
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-def test_tws_processor_replaces_timer_while_holding():
-    """While a transaction stays open across batches, exactly ONE
-    timer may be live, and it must track the NEWEST event time —
-    matching applyInPandasWithState's replace-on-set semantics."""
-    import pandas as pd
-
-    from mysql_cdc_spark.streaming.stateful import _TxnAssemblyProcessor
-
-    gap = 60_000
-    proc = _TxnAssemblyProcessor(gap)
-    handle = _FakeHandle()
-    proc.init(handle)
-    key = ("binlog.000001",)
-
-    def batch(offsets, ops, xids, ts_ms, wm_ms):
-        pdf = pd.DataFrame(
-            {
-                "offset": offsets,
-                "op": ops,
-                "xid": xids,
-                "ts": [pd.Timestamp(t, unit="ms") for t in ts_ms],
-            }
-        )
-        return list(proc.handleInputRows(key, iter([pdf]), _FakeTimerValues(wm_ms)))
-
-    t1, t2, t3 = 1_000_000, 2_000_000, 3_000_000
-    out = batch([0], ["write_rows"], [float("nan")], [t1], wm_ms=0)
-    assert out == [] and handle.timers == [t1 + gap]
-
-    # still holding in batch 2: the older timer must be DELETED, not
-    # joined by a second one (the stale firing is the r15 ADVICE bug)
-    out = batch([1], ["write_rows"], [float("nan")], [t2], wm_ms=t1)
-    assert out == []
-    assert handle.timers == [t2 + gap], handle.timers
-
-    # xid closes the transaction: emit once, state gone, timers gone
-    out = batch([2], ["xid"], [7.0], [t3], wm_ms=t2)
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (
-        row["n_events"] == 3
-        and row["first_offset"] == 0
-        and row["last_offset"] == 2
-        and row["xid"] == 7
-    )
-    assert handle.timers == [] and not proc.cursor.exists() and not proc.buf.exists()
-
-
 def test_txn_assembler_open_state_bound(spark):
     """r15 VERDICT #3 pinned bound: K concurrent OPEN transactions
     (one per log_file key — assembly is serial per file by commit
@@ -827,3 +482,38 @@ def test_txn_assembler_open_state_bound(spark):
     # x 2000 commit batches would sit far beyond 120 s on any
     # observed host).
     assert m["wall_sec"] <= 120, m
+
+
+def test_measure_latency_every_mode_sees_every_turn(spark, monkeypatch):
+    """Smoke test of the BASELINE metric-3 decomposition at two turns.
+    A mode that misses a turn raises inside measure_latency (decode
+    counts its commits; full and both push modes wait for each turn's
+    xid), so a returned dict means every mode saw every turn; the
+    append spy pins that each mode really ran every turn, and the full
+    mode's mysql_binlog stream must be stopped on return."""
+    from mysql_cdc_spark.streaming import latency
+
+    appends: dict[str, int] = {}
+    append_txn = latency._GrowingLog.append_txn
+
+    def spy(self, i):
+        name = self.path.rsplit("/", 1)[-1]
+        appends[name] = appends.get(name, 0) + 1
+        append_txn(self, i)
+
+    monkeypatch.setattr(latency._GrowingLog, "append_txn", spy)
+    active = {q.id for q in spark.streams.active}
+    got = latency.measure_latency(spark, turns=2, scratch_root=TMP)
+
+    assert set(got) == {
+        "full", "write", "decode", "net", "push", "push_net",
+        "push_durable", "turns",
+    }
+    assert got["turns"] == 2
+    assert got["full"] > 0 and got["push"] > 0
+    # w/d/p/pj: one append per turn; the stream's log adds one untimed
+    # warm-up turn
+    assert appends == {
+        "w.bin": 2, "d.bin": 2, "binlog.000001": 3, "p.bin": 2, "pj.bin": 2,
+    }
+    assert {q.id for q in spark.streams.active} <= active

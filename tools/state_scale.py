@@ -2,7 +2,10 @@
 stateful key cardinality 10-100× beyond the fixture's and record, for
 the default on-heap provider vs RocksDB:
 
-- drain wall (4 micro-batches, availableNow, noop sink)
+- drain wall of the declarative latest-state aggregate (a streaming
+  groupBy max_by(struct(...), offset) in update mode, the shape
+  `cdc_stream_latest_state_agg` registers; 4 micro-batches,
+  availableNow, noop sink)
 - final state rows + reported state memory (stateOperators metrics)
 - summed state commit time across batches
 - checkpoint directory size on disk
@@ -10,9 +13,7 @@ the default on-heap provider vs RocksDB:
 The r11 A/B ran at fixture-state size only (~couple thousand keys);
 this names the cardinality where the default provider actually
 degrades — or records honestly that it doesn't within reachable
-cardinalities and what the real bottleneck is (the Python
-applyInPandasWithState per-group cost is a candidate: state transfer
-is Arrow-batched but groups are iterated per key).
+cardinalities.
 
 Fixture per cardinality K: 4 parquet files (one per micro-batch,
 maxFilesPerTrigger=1), each with one update for EVERY key (offset =
@@ -88,18 +89,12 @@ def run_once(
     spark,
     src: Path,
     provider: str | None,
-    impl: str = "python",
     extra_confs: dict[str, str] | None = None,
 ) -> dict:
-    """impl='python' runs the custom applyInPandasWithState operator
-    (the queries()-registered shape); impl='jvm' runs its DECLARATIVE
-    twin — a streaming groupBy max_by(struct(...), offset) in update
-    mode, all JVM-side state — same per-key latest-image semantics,
-    none of the per-group Python invocation cost."""
+    """Drain the fixture through the declarative latest-state
+    aggregate under `provider` (None = the default on-heap store)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-
-    from mysql_cdc_spark.streaming.stateful import latest_state_stateful
 
     key = "spark.sql.streaming.stateStore.providerClass"
     if provider is None:
@@ -124,17 +119,14 @@ def run_once(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    if impl == "python":
-        transformed = latest_state_stateful(stream)
-    else:
-        transformed = (
-            stream.filter(F.col("_delta_type") != "update-before")
-            .groupBy("db", "tbl", "id")
-            .agg(
-                F.expr("max_by(struct(value, _delta_type), offset)").alias("last"),
-                F.max("offset").alias("as_of_offset"),
-            )
+    transformed = (
+        stream.filter(F.col("_delta_type") != "update-before")
+        .groupBy("db", "tbl", "id")
+        .agg(
+            F.expr("max_by(struct(value, _delta_type), offset)").alias("last"),
+            F.max("offset").alias("as_of_offset"),
         )
+    )
     cp = SCRATCH / f"cp_{uuid.uuid4().hex[:10]}"
     t0 = time.perf_counter()
     q = (
@@ -415,24 +407,11 @@ def main() -> None:
     warm = build_fixture(1000)
     for prov in _PROVIDERS.values():
         run_once(spark, warm, prov)
-    # --jvm adds the declarative twin; --jvm-only drops the python
-    # operator (at 5M+ keys its measured ~0.9 ms/key/batch cost is
-    # hours — the r13 ramp extension is about the TWIN's cliff)
-    if "--jvm-only" in sys.argv:
-        impls = ("jvm",)
-    elif "--jvm" in sys.argv:
-        impls = ("python", "jvm")
-    else:
-        impls = ("python",)
     for k in ks:
         src = build_fixture(k)
-        for impl in impls:
-            for tag, prov in providers.items():
-                m = run_once(spark, src, prov, impl)
-                print(
-                    json.dumps({"keys": k, "impl": impl, "provider": tag, **m}),
-                    flush=True,
-                )
+        for tag, prov in providers.items():
+            m = run_once(spark, src, prov)
+            print(json.dumps({"keys": k, "provider": tag, **m}), flush=True)
 
 
 if __name__ == "__main__":
