@@ -294,7 +294,7 @@ def main() -> None:
 
     # The mysql_binlog Python DataSource (r16): the same byte log
     # through format("mysql_binlog") — arrow RecordBatch ingest, one
-    # input partition per file.  Tracked next to the mapInPandas
+    # input partition per file.  Tracked next to the mapInArrow
     # envelope wall so a protocol-layer regression is visible in the
     # bench line (full sweep incl. Catalyst pushdown and the streaming
     # drain: tools/ds_bench.py).

@@ -4,7 +4,7 @@ A from-scratch rebuild of the capabilities of hoeck/mysql-cdc (a MySQL
 binlog CDC reader with a streaming-SQL JDBC driver) on top of Apache
 Spark — the change-event data model is a DataFrame, the query surface
 is Spark SQL, the streaming runtime is Structured Streaming, the binlog
-byte codec is pure Python behind a `binaryFile` + `mapInPandas` scan —
+byte codec is pure Python behind a `binaryFile` + `mapInArrow` scan —
 plus the LLM-training-data operators (dedup, similarity search, text
 analysis, multimodal plumbing) a 100 TB pipeline needs.
 
@@ -22,7 +22,7 @@ Layout:
         events_cdc.py     — derived change-event stream (envelope + explode)
         io.py             — fixture readers (ns-timestamp handling)
         binlog_codec.py   — v4 binlog byte codec (D1-D12, packed decimal)
-        binlog_source.py  — binaryFile + mapInPandas decode, fixture writer
+        binlog_source.py  — binaryFile + mapInArrow decode, fixture writer
     operators/
         query.py          — the reference's SQL surface (R1-R6, R10)
         relational.py     — joins/aggs/windows/set-ops (SURVEY §2.5),

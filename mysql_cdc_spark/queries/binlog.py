@@ -14,7 +14,7 @@ from mysql_cdc_spark.queries._shared import (  # noqa: E402
 # ---------------------------------------------------------------------------
 # Binlog byte codec end-to-end (sources/binlog_codec.py + binlog_source
 # .py): events → REAL binlog bytes (driver-side encode) → binaryFile +
-# mapInPandas decode on executors → envelope, hash-checked against the
+# mapInArrow decode on executors → envelope, hash-checked against the
 # same derivation done in SQL.  This exercises D1-D12 (headers,
 # table-map, row bitfields/null maps, packed decimal, packed ints).
 # ---------------------------------------------------------------------------
@@ -227,7 +227,7 @@ def cdc_binlog_rows_query(spark, sf_dir):
 def cdc_binlog_envelope(spark, sf_dir):
     """Full binlog fidelity path: encode the derived change stream as
     real v4 binlog BYTES, decode with the pure-Python codec via
-    binaryFile + mapInPandas, and project the envelope.  The oracle
+    binaryFile + mapInArrow, and project the envelope.  The oracle
     re-derives the same records relationally — so every header, packed
     int, bitfield, null map and packed decimal must round-trip."""
     return _binlog_envelope_projected(spark, sf_dir, "binlog")
@@ -837,7 +837,7 @@ def cdc_binlog_enum_set(spark, sf_dir):
     """ENUM + SET columns through the full byte path (reference
     read-type, mysql_binlog.clj:530-536): encode bench.tags (both ENUM
     ordinal widths, both SET bitset widths, NULLable ENUM) as real
-    binlog bytes, decode via binaryFile + mapInPandas, and project the
+    binlog bytes, decode via binaryFile + mapInArrow, and project the
     after-images.  ENUM surfaces as its 1-based ordinal; SET as the
     little-endian hex of its raw bitset bytes."""
     import pathlib
@@ -907,7 +907,7 @@ def cdc_binlog_wide_types(spark, sf_dir):
     0/2/3-digit fractional seconds (TIME2 exercising negative values
     through the offset-binary sign), and BLOB (hex in the envelope).
     Encode bench.wide as real binlog bytes, decode via binaryFile +
-    mapInPandas, project + cast the after-images; the oracle recomputes
+    mapInArrow, project + cast the after-images; the oracle recomputes
     every column in closed form from event_id."""
     import pathlib
 
@@ -1281,7 +1281,7 @@ def cdc_ds_envelope(spark, sf_dir):
     API: spark.read.format("mysql_binlog") plans one InputPartition
     per rotated file, executors decode whole files and hand Spark
     arrow RecordBatches.  Same oracle as cdc_binlog_envelope — the
-    two scan paths (binaryFile+mapInPandas vs DataSource) must agree
+    two scan paths (binaryFile+mapInArrow vs DataSource) must agree
     byte-for-byte.  Reference anchor: mysql_binlog.clj:907-938 is a
     driver-side tailer; the DataSource is its Spark-native batch
     form."""

@@ -1,6 +1,6 @@
 """MySQL binlog byte codec (SURVEY §2.2 D1-D12): pure-Python encode +
 decode of the v4 row-based binary log, exposed to Spark as a
-`binaryFile` scan + `mapInPandas` decode (sources/binlog_source.py).
+`binaryFile` scan + `mapInArrow` decode (sources/binlog_source.py).
 
 Implemented from the PUBLIC MySQL binary-log format (binlog event
 header/type layouts and the strings/decimal.c packed-decimal format as
@@ -2072,16 +2072,17 @@ def stringify_image(image: dict | None) -> dict | None:
     }
 
 
-def _make_field_skipper(tc: int, meta):
-    """Byte-width walker for ONE column: a constant int for fixed-width
-    types, or a closure ``(body, pos) -> new_pos`` for length-prefixed
-    ones.  The projection-pruning fast path (`images=` pushdown): when
-    a scan's projection needs no before/after image values, row images
-    are WIDTH-WALKED — no value materialization, no per-field Python
+def _field_skip_src(k: int, tc: int, meta, env: dict) -> int | str:
+    """Byte width of ONE column for the compiled width-walk
+    (`_skip_plan`): a constant int for fixed-width types, or a source
+    expression for the new ``pos`` of a length-prefixed one.  The
+    projection-pruning fast path (`images=` pushdown): when a scan's
+    projection needs no before/after image values, row images are
+    WIDTH-WALKED — no value materialization, no per-field Python
     object, no charset/decimal/JSON decode — while row cardinality and
-    frame alignment stay exact.  Width parity with
-    `_make_field_decoder` is pinned by test (test_binlog_codec):
-    every skipper must land exactly where its decoder lands."""
+    frame alignment stay exact.  Every width must land exactly where
+    `_read_value` lands (pinned by tests/test_binlog_codec.py and the
+    codec property fuzz); the generated names bind into ``env``."""
     if tc == TYPE_STRING and isinstance(meta, tuple):
         m0, m1 = meta
         if m0 in (TYPE_ENUM, TYPE_SET):
@@ -2095,12 +2096,8 @@ def _make_field_skipper(tc: int, meta):
         return _INT_TYPES[tc]
     if tc in (TYPE_VARCHAR, TYPE_VAR_STRING):
         if int(meta) < 256:
-            def s_str1(body, pos):
-                return pos + 1 + body[pos]
-            return s_str1
-        def s_str2(body, pos):
-            return pos + 2 + (body[pos] | (body[pos + 1] << 8))
-        return s_str2
+            return "pos + 1 + body[pos]"
+        return "pos + 2 + (body[pos] | (body[pos + 1] << 8))"
     if tc == TYPE_NEWDECIMAL:
         p_, s_ = meta
         return decimal_bin_size(p_, s_)
@@ -2127,67 +2124,68 @@ def _make_field_skipper(tc: int, meta):
         return nbytes + (1 if bits_rem else 0)
     if tc in (TYPE_JSON, TYPE_BLOB):
         n = int(meta or 4) if tc == TYPE_JSON else int(meta)
-        def s_len(body, pos, n=n):
-            return pos + n + int.from_bytes(body[pos:pos + n], "little")
-        return s_len
+        return f"pos + {n} + ifb(body[pos:pos + {n}], 'little')"
     # unknown type: decode-and-discard keeps one width semantics
-    dec = _make_field_decoder(tc, meta)
-    def s_generic(body, pos, dec=dec):
-        return dec(body, pos)[1]
-    return s_generic
+    env[f"d{k}"] = _make_field_decoder(tc, meta)
+    return f"d{k}(body, pos)[1]"
 
 
 def _skip_plan(tmap: TableMapState, used_bitmap: bytes):
-    """Compiled width-walk for one (table map, used-bitmap) shape,
-    cached on the map instance like `_image_plan`.  Three parts:
-    per-column entries (int width | var-width closure) for images with
-    NULLs, the same entries with ADJACENT fixed widths merged for the
-    fully-non-NULL hot path, and the all-fixed total (None when any
-    column is length-prefixed) which makes a non-NULL image skip O(1)."""
+    """Compiled ``(body, pos) -> new_pos`` width-walk of one row image
+    for one (table map, used-bitmap) shape, cached on the map instance
+    like `_image_plan`.  NULL columns consume zero bytes (their bit is
+    set), so the per-column null test only runs when the bitmap is
+    non-zero; the fully-non-NULL hot path adds ADJACENT fixed widths
+    into one constant (all-fixed images skip in O(1))."""
     plans = tmap.__dict__.get("_skip_plans")
     if plans is None:
         plans = tmap._skip_plans = {}
     plan = plans.get(used_bitmap)
     if plan is None:
         used = _used_cols(len(tmap.col_types), used_bitmap)
-        entries = [
-            _make_field_skipper(tmap.col_types[i], tmap.col_meta[i])
-            for i in used
+        env: dict = {"ifb": int.from_bytes}
+        widths = [
+            _field_skip_src(k, tmap.col_types[i], tmap.col_meta[i], env)
+            for k, i in enumerate(used)
         ]
-        merged: list = []
-        for ent in entries:
-            if isinstance(ent, int) and merged and isinstance(merged[-1], int):
-                merged[-1] += ent
-            else:
-                merged.append(ent)
-        fixed_total = (
-            merged[0] if len(merged) == 1 and isinstance(merged[0], int)
-            else (0 if not merged else None)
-        )
-        plan = (entries, merged, (len(used) + 7) // 8, fixed_total)
+        plan = _compile_skip_plan(widths, (len(used) + 7) // 8, env)
         plans[used_bitmap] = plan
     return plan
 
 
-def _skip_image_plan(body: bytes, pos: int, plan) -> int:
-    """Walk one row image's bytes without materializing any value.
-    NULL columns consume zero bytes (their bit is set), so the
-    per-column null test only runs when the bitmap is non-zero."""
-    entries, merged, null_bytes, fixed_total = plan
-    nulls = int.from_bytes(body[pos:pos + null_bytes], "little")
-    pos += null_bytes
-    if not nulls:
-        if fixed_total is not None:
-            return pos + fixed_total
-        for ent in merged:
-            pos = pos + ent if isinstance(ent, int) else ent(body, pos)
-        return pos
-    j = 0
-    for ent in entries:
-        if not (nulls >> j) & 1:
-            pos = pos + ent if isinstance(ent, int) else ent(body, pos)
-        j += 1
-    return pos
+def _compile_skip_plan(widths: list, null_bytes: int, env: dict):
+    """Source-compile the width-walk (see `_compile_image_plan`):
+    ``widths`` holds one `_field_skip_src` result per used column."""
+
+    def step(w) -> str:
+        return f"pos += {w}" if isinstance(w, int) else f"pos = {w}"
+
+    merged: list = []
+    for w in widths:
+        if isinstance(w, int) and merged and isinstance(merged[-1], int):
+            merged[-1] += w
+        else:
+            merged.append(w)
+    args = ", ".join(f"{k}={k}" for k in env)
+    if null_bytes == 1:
+        null_read = ["    nulls = body[pos]", "    pos += 1"]
+    else:
+        null_read = [
+            f"    nulls = ifb(body[pos:pos + {null_bytes}], 'little')",
+            f"    pos += {null_bytes}",
+        ]
+    lines = [f"def _skip(body, pos, {args}):", *null_read]
+    if widths:
+        lines.append("    if nulls:")
+        for j, w in enumerate(widths):
+            lines.append(f"        if not nulls & {1 << j}:")
+            lines.append(f"            {step(w)}")
+        lines.append("        return pos")
+        lines.extend(f"    {step(w)}" for w in merged)
+    lines.append("    return pos")
+    exec("\n".join(lines), env)  # noqa: S102 — source built from
+    # type codes and integer widths only, no external input
+    return env["_skip"]
 
 
 def _read_partial_image(
@@ -2646,12 +2644,28 @@ def _decode_body(
             skip2 = None if need_a else _skip_plan(tmap, used2)
         rows_before, rows_after = [], []
         body_len = len(body)
+        if plan1 is None and plan2 is None:
+            # every image side width-walked: only the row count is
+            # needed, so walk without per-row image bookkeeping
+            n = 0
+            while p < body_len:
+                p0 = p
+                p = skip1(body, p)
+                if skip2 is not None:
+                    p = skip2(body, p)
+                if p <= p0:
+                    raise ValueError("row image consumed no bytes")
+                n += 1
+            if not is_write:
+                rows_before = [None] * n
+            if is_update or is_write:
+                rows_after = [None] * n
         while p < body_len:
             p0 = p
             if plan1 is not None:
                 img1, p = plan1(body, p)
             else:
-                img1, p = None, _skip_image_plan(body, p, skip1)
+                img1, p = None, skip1(body, p)
             if is_partial:
                 img2, p = _read_partial_image(body, p, tmap, used2, img1)
                 rows_before.append(img1); rows_after.append(img2)
@@ -2659,7 +2673,7 @@ def _decode_body(
                 if plan2 is not None:
                     img2, p = plan2(body, p)
                 else:
-                    img2, p = None, _skip_image_plan(body, p, skip2)
+                    img2, p = None, skip2(body, p)
                 rows_before.append(img1); rows_after.append(img2)
             elif is_write:
                 rows_after.append(img1)

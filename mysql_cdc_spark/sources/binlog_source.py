@@ -1,5 +1,5 @@
 """Spark integration for the binlog codec: `binaryFile` scan +
-`mapInPandas` decode into the generic MAP-payload envelope (SURVEY
+`mapInArrow` decode into the generic MAP-payload envelope (SURVEY
 §1.4 — dynamic per-table schemas; the nil-vs-'_' distinction survives
 as value-None vs key-absent in the MAP images).
 
@@ -8,7 +8,7 @@ sequential WITHIN a file (events are offset-chained, table-map state
 threads through — reference read-binlog, mysql_binlog.clj:707-752),
 and embarrassingly parallel ACROSS files; at 100 TB a binlog directory
 is thousands of rotated files, so the `binaryFile` scan parallelizes
-per file.  The Python decode is Arrow-batched via `mapInPandas` (never
+per file.  The Python decode is Arrow-batched via `mapInArrow` (never
 row-at-a-time UDFs).
 
 The writer half (fixture generation from the `events` table) gives the
@@ -61,6 +61,7 @@ from mysql_cdc_spark.sources.binlog_codec import (
 
 if TYPE_CHECKING:
     import pandas as pd
+    import pyarrow as pa
 
 # Real column names for the fixture tables — the catalog lookup the
 # reference planned but never built (mysql_binlog.clj:505-508 "read
@@ -272,9 +273,9 @@ def envelope_columns(
 ) -> tuple[dict[str, list], int]:
     """`envelope_records` in COLUMNAR form (r15 VERDICT #1): one list
     per envelope column, appended in a single pass — no per-record
-    dict allocation and no dict(base) copy per row image, and pandas
-    builds the mapInPandas batch from dict-of-lists (a C-speed column
-    zip) instead of re-inferring a list-of-dicts.  Content parity
+    dict allocation and no dict(base) copy per row image, and the
+    scans build their Arrow batch from dict-of-lists (one typed array
+    per column) instead of re-inferring a list-of-dicts.  Content parity
     with `envelope_records` is pinned by test; the record form stays
     for the push delivery (per-event callbacks).
 
@@ -692,16 +693,22 @@ def read_binlog_envelope(
     # ordinals) — `or` would silently coerce {} to the fixtures.
     cat = FIXTURE_CATALOG if catalog is None else catalog
 
-    def decode_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
+    def decode_part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # the DataSource's Arrow builder: typed arrays straight from the
+        # envelope lists, no pandas frame (its object-column inference
+        # and the pandas→Arrow conversion cost more than the envelope)
+        from mysql_cdc_spark.sources.binlog_datasource import _arrow_batch
 
-        for pdf in batches:
+        for batch in batches:
             parts: dict[str, list] = {c: [] for c in out_cols}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                log_file = str(fpath).rsplit("/", 1)[-1]
+            for fpath, content in zip(
+                batch.column("path").to_pylist(),
+                batch.column("content").to_pylist(),
+            ):
+                log_file = fpath.rsplit("/", 1)[-1]
                 cols, _ = envelope_columns(
                     decode_binlog(
-                        bytes(content), cat, on_error=on_error,
+                        content, cat, on_error=on_error,
                         only_tables=only_tables, only_ops=only_ops,
                         images=images, stringify=True,
                     ),
@@ -710,14 +717,9 @@ def read_binlog_envelope(
                 )
                 for c in out_cols:
                     parts[c].extend(cols[c])
-            for c in ("xid", "thread_id", "exec_time", "error_code"):
-                # nullable ints must not coerce to float64 (the
-                # None+int pandas trap — 64-bit values would round)
-                if c in parts:
-                    parts[c] = pd.array(parts[c], dtype="Int64")
-            yield pd.DataFrame(parts, columns=list(out_cols))
+            yield _arrow_batch(parts, columns)
 
-    env = files.mapInPandas(decode_part, out_schema)
+    env = files.mapInArrow(decode_part, out_schema)
     if since is not None:
         # boundary-file cut: later files pass whole, the resume file
         # passes from the journaled offset (narrow filter, no shuffle)

@@ -1,7 +1,7 @@
 """Multi-core decode scaling (r14 VERDICT #3).
 
 decode_rows_per_sec in bench.py is a single-pipeline number; the
-100 TB claim rests on mapInPandas parallelism across binlog FILES
+100 TB claim rests on mapInArrow parallelism across binlog FILES
 (read_binlog_envelope hash-distributes whole files to tasks).  This
 tool measures end-to-end envelope decode rows/s on the x10 multi-file
 byte log (400 files, ~200 MB) at 1 / 8 / 32 cores, each in its OWN

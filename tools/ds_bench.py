@@ -1,4 +1,4 @@
-"""mysql_binlog DataSource vs binaryFile+mapInPandas: same codec, two
+"""mysql_binlog DataSource vs binaryFile+mapInArrow: same codec, two
 scan protocols — measures what the Python Data Source path costs or
 saves at scale.
 
