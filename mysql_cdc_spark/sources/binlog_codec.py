@@ -2644,22 +2644,6 @@ def _decode_body(
             skip2 = None if need_a else _skip_plan(tmap, used2)
         rows_before, rows_after = [], []
         body_len = len(body)
-        if plan1 is None and plan2 is None:
-            # every image side width-walked: only the row count is
-            # needed, so walk without per-row image bookkeeping
-            n = 0
-            while p < body_len:
-                p0 = p
-                p = skip1(body, p)
-                if skip2 is not None:
-                    p = skip2(body, p)
-                if p <= p0:
-                    raise ValueError("row image consumed no bytes")
-                n += 1
-            if not is_write:
-                rows_before = [None] * n
-            if is_update or is_write:
-                rows_after = [None] * n
         while p < body_len:
             p0 = p
             if plan1 is not None:
