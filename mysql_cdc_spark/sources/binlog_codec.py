@@ -128,6 +128,14 @@ ROW_EVENT_TYPES = frozenset({
     PARTIAL_UPDATE_ROWS_EVENT,
 })
 
+# Op names that become envelope records (the push delivery and the
+# Spark scans); rotate, format_description and the other framing
+# events never surface.
+ENVELOPE_OPS = frozenset({
+    "query", "table_map", "write_rows", "update_rows", "delete_rows", "xid",
+    "quarantine", "gtid", "previous_gtids", "rows_query",
+})
+
 # Column type codes (public; reference table :430-457)
 TYPE_TINY = 1
 TYPE_SHORT = 2
@@ -1879,10 +1887,11 @@ def _make_field_decoder(tc: int, meta, unsigned: bool = False,
                         charset: str | None = None):
     """``(body, pos) -> (value, new_pos)`` for ONE column: `_read_value`
     with the column's type metadata bound.  The compiled image plans
-    (`_compile_image_plan`) inline the hot OLTP types and call this
-    closure for every other type; it is also the interpreted reference
-    the compiled plans are pinned against (tests/test_compiled_image_
-    plan.py) — one semantics, two speeds."""
+    (`_compile_image_plan`) inline the hot OLTP types (ints, strings,
+    CHAR/ENUM/SET, NEWDECIMAL) and call this closure for every other
+    type; it is also the interpreted reference the compiled plans are
+    pinned against (tests/test_compiled_image_plan.py) — one semantics,
+    two speeds."""
     def d_value(body, pos, tc=tc, meta=meta, unsigned=unsigned,
                 charset=charset):
         return _read_value(body, pos, tc, meta, unsigned, charset)
@@ -1895,10 +1904,10 @@ def _field_inline_src(i: int, tc: int, meta, unsigned: bool,
     """Source lines decoding column i inline inside the compiled image
     decoder (`_compile_image_plan`), or None to fall back to a
     `_make_field_decoder` closure call.  Covers the hot OLTP types
-    (ints, length-prefixed strings, packed CHAR, ENUM/SET, memoized
-    NEWDECIMAL) and MUST stay value- and width-identical to
-    `_read_value` (pinned by tests/test_compiled_image_plan.py + the
-    codec property fuzz).
+    (ints, length-prefixed strings, packed CHAR, ENUM/SET, NEWDECIMAL
+    unrolled per (precision, scale)) and MUST stay value- and
+    width-identical to `_read_value` (pinned by
+    tests/test_compiled_image_plan.py + the codec property fuzz).
 
     ``stringify=True`` emits the MAP-envelope string form directly
     (`stringify_image` semantics fused into the decode: int → str,
@@ -1946,20 +1955,55 @@ def _field_inline_src(i: int, tc: int, meta, unsigned: bool,
     if tc == TYPE_NEWDECIMAL:
         p_, s_ = meta
         size = decimal_bin_size(p_, s_)
-        # Per-shape bounded value memo: an OLTP decimal column carries
-        # few distinct values relative to row count, and the packed
-        # bytes → canonical string decode (2.7 µs/value, the hottest
-        # codec function in profile) is pure; a hit is one dict lookup.
-        env[f"m{i}"] = {}
+        if not size:
+            return None
+        # Specialised per (precision, scale): a complete non-negative
+        # value (sign bit set) unpacks its groups from one integer
+        # straight into the canonical text; a negative or truncated one
+        # takes `decode_decimal` (complement, -0 rule, short groups).
         return [f"e = pos + {size}",
-                f"k = body[pos:e]",
-                f"v{i} = m{i}.get(k)",
-                f"if v{i} is None:",
-                f"    if len(m{i}) >= 4096:",
-                f"        m{i}.clear()",
-                f"    v{i} = m{i}[k] = ddec(k, {p_}, {s_})",
+                "if body[pos] & 128 and e <= len(body):",
+                f"    x = ifb(body[pos:e], 'big') ^ {1 << (8 * size - 1)}",
+                f"    v{i} = {_decimal_inline_expr(p_, s_)}",
+                "else:",
+                f"    v{i} = ddec(body[pos:e], {p_}, {s_})",
                 "pos = e"]
     return None
+
+
+def _decimal_inline_expr(precision: int, scale: int) -> str:
+    """Source expression for the canonical text of a packed
+    DECIMAL(precision, scale) whose bytes, sign bit already cleared,
+    are the integer ``x``: `decode_decimal` unrolled for one shape —
+    the same base-10^9 groups (shifted out of ``x`` instead of sliced)
+    and the same folds, so any complete non-negative field, canonical
+    or not, yields the same text."""
+    intg = precision - scale
+    groups: list[tuple[int, int]] = []   # (bytes, fold multiplier)
+    if intg % 9:
+        groups.append((_DIG2BYTES[intg % 9], 0))
+    groups += [(4, 1_000_000_000)] * (intg // 9)
+    n_int = len(groups)
+    groups += [(4, 1_000_000_000)] * (scale // 9)
+    if scale % 9:
+        groups.append((_DIG2BYTES[scale % 9], _POW10[scale % 9]))
+    terms: list[str] = []
+    shift = 8 * sum(n for n, _ in groups)
+    for k, (n, _) in enumerate(groups):
+        shift -= 8 * n
+        g = f"(x >> {shift})" if shift else "x"
+        terms.append(g if k == 0 else f"({g} & {(1 << (8 * n)) - 1})")
+
+    def fold(lo: int, hi: int) -> str:
+        acc = None
+        for k in range(lo, hi):
+            acc = terms[k] if acc is None else f"({acc}) * {groups[k][1]} + {terms[k]}"
+        return acc or "0"
+
+    ip, fp = fold(0, n_int), fold(n_int, len(groups))
+    if not scale:
+        return f"str({ip})"
+    return f"'%d.%0{scale}d' % ({ip}, {fp})"
 
 
 def _compile_image_plan(specs: list, null_bytes: int,
@@ -2188,6 +2232,155 @@ def _compile_skip_plan(widths: list, null_bytes: int, env: dict):
     return env["_skip"]
 
 
+_UPDATE_TYPES = frozenset({
+    UPDATE_ROWS_EVENT, UPDATE_ROWS_EVENT_V2, PARTIAL_UPDATE_ROWS_EVENT,
+})
+
+
+def _row_section(tmap: TableMapState, type_code: int, used1: bytes,
+                 used2: bytes | None, images: str, stringify: bool):
+    """Compile the ``(body, p) -> (before_rows, after_rows)`` decoder of
+    a WRITE/UPDATE/DELETE event's row section for one (table map, row
+    type, used bitmaps, ``images``, ``stringify``) shape and cache it on
+    the map, where `_decode_rows` looks it up: which side each image
+    lands on, and whether it is decoded (`_image_plan`) or width-walked
+    (`_skip_plan`), is settled here once, so the per-row loop has no
+    branches.  A side the projection never reads surfaces as None
+    placeholders, so row count and row_idx match a full decode."""
+    want = {"before": images in ("both", "before"),
+            "after": images in ("both", "after")}
+    # (row list, used bitmap) per image, in wire order; WRITE's
+    # single image is the after side
+    if used2 is not None:
+        sides = [("before", used1), ("after", used2)]
+    elif type_code in (WRITE_ROWS_EVENT, WRITE_ROWS_EVENT_V2):
+        sides = [("after", used1)]
+    else:
+        sides = [("before", used1)]
+    env: dict = {}
+    head = ["    end = len(body)"]
+    loop: list[str] = []
+    for k, (side, used) in enumerate(sides):
+        head.append(f"    {side} = []; add_{side} = {side}.append")
+        if want[side]:
+            env[f"d{k}"] = _image_plan(tmap, used, stringify)
+            loop.append(f"img, p = d{k}(body, p); add_{side}(img)")
+        else:
+            env[f"s{k}"] = _skip_plan(tmap, used)
+            loop.append(f"p = s{k}(body, p); add_{side}(None)")
+    names = [side for side, _ in sides]
+    out = ", ".join(f"{side} or None" if side in names else "None"
+                    for side in ("before", "after"))
+    args = ", ".join(f"{k}={k}" for k in env)
+    lines = [
+        f"def _sec(body, p, {args}):",
+        *head,
+        "    while p < end:",
+        "        p0 = p",
+        *(f"        {ln}" for ln in loop),
+        "        if p <= p0:",   # zero-width image on a non-empty tail
+        "            raise ValueError('row image consumed no bytes')",
+    ]
+    if not all(want[side] for side in names):
+        # a width walk that overshoots the body means skipper/
+        # decoder width divergence or corruption — surface it, a
+        # silent overshoot would drop rows the full decode keeps
+        lines += [
+            "    if p != end:",
+            "        raise ValueError(f'row section misparse under image "
+            "pruning: walked to {p}, body is {end}')",
+        ]
+    lines.append(f"    return {out}")
+    exec("\n".join(lines), env)  # noqa: S102 — fixed source over
+    # compiled plans, no external input
+    sec = env["_sec"]
+    tmap.__dict__.setdefault("_row_secs", {})[
+        (type_code, used1, used2, images, stringify)
+    ] = sec
+    return sec
+
+
+def _decode_rows(ev: dict, type_code: int, body: bytes,
+                 tmap: TableMapState | None, images: str,
+                 stringify: bool) -> None:
+    """Row-event body decode into ``ev`` (reference read-wud-rows,
+    mysql_binlog.clj:611-682): post-header, width check and bitmaps,
+    then the compiled `_row_section` — or, for PARTIAL_UPDATE, the
+    diff-applying loop."""
+    if tmap is None:
+        raise ValueError("row event without preceding TABLE_MAP")
+    ev["db"], ev["tbl"] = tmap.db, tmap.table
+    p = 8  # table_id(6) + flags(2)
+    if type_code >= WRITE_ROWS_EVENT_V2:
+        # v2 post-header (MySQL >=5.6, incl. PARTIAL_UPDATE 39):
+        # extra-row-info length u16 INCLUDING its own two bytes;
+        # skip the optional payload (NDB info / partition info)
+        # real servers may emit.
+        extra_len = int.from_bytes(body[8:10], "little")
+        if extra_len < 2:
+            raise ValueError(f"rows v2 extra-data length {extra_len} < 2")
+        p = 8 + extra_len
+    n_cols = body[p]
+    if n_cols < 251:
+        p += 1
+    else:
+        n_cols, p = read_packed_int(body, p)
+    # A real row event's declared width always equals its table
+    # map's column count; disagreement means a corrupt body.
+    # Without this check a garbage width silently skips the whole
+    # row section (the bitmap slice overshoots the body) and the
+    # event decodes as an EMPTY row set — worse than failing.
+    if n_cols != len(tmap.col_types):
+        raise ValueError(
+            f"row event declares {n_cols} columns, "
+            f"table map has {len(tmap.col_types)}"
+        )
+    bm_bytes = (n_cols + 7) // 8
+    used1 = body[p:p + bm_bytes]; p += bm_bytes
+    used2 = None
+    if type_code in _UPDATE_TYPES:
+        used2 = body[p:p + bm_bytes]; p += bm_bytes
+    if type_code == PARTIAL_UPDATE_ROWS_EVENT:
+        ev["before"], ev["after"] = _partial_rows(
+            body, p, tmap, used1, used2, images, stringify
+        )
+        return
+    secs = tmap.__dict__.get("_row_secs")
+    sec = secs.get((type_code, used1, used2, images, stringify)) if secs else None
+    if sec is None:
+        sec = _row_section(tmap, type_code, used1, used2, images, stringify)
+    ev["before"], ev["after"] = sec(body, p)
+
+
+def _partial_rows(body: bytes, p: int, tmap: TableMapState, used1: bytes,
+                  used2: bytes, images: str, stringify: bool):
+    """Row section of a PARTIAL_UPDATE_ROWS_EVENT.  Its after-images
+    are JSON diffs against the typed before image, so both sides always
+    decode fully and ``images=`` only applies the placeholder contract
+    afterwards (prune is then not-faster, never wrong)."""
+    plan1 = _image_plan(tmap, used1)
+    rows_before, rows_after = [], []
+    body_len = len(body)
+    while p < body_len:
+        p0 = p
+        img1, p = plan1(body, p)
+        img2, p = _read_partial_image(body, p, tmap, used2, img1)
+        rows_before.append(img1); rows_after.append(img2)
+        if p <= p0:  # zero-width image on a non-empty tail = corrupt
+            raise ValueError("row image consumed no bytes")
+    n = len(rows_before)
+    if images in ("after", "none"):
+        rows_before = [None] * n
+    if images in ("before", "none"):
+        rows_after = [None] * n
+    if stringify:
+        # decoded typed (diff base) — convert now so the event's
+        # string contract matches the string-mode plans
+        rows_before = [stringify_image(r) for r in rows_before]
+        rows_after = [stringify_image(r) for r in rows_after]
+    return rows_before or None, rows_after or None
+
+
 def _read_partial_image(
     body: bytes,
     pos: int,
@@ -2394,7 +2587,17 @@ def decode_binlog_incremental(
     # frames per x100 log
     data_len = len(data)
     unpack_header = struct.Struct("<IBIIIH").unpack_from
+    unpack_xid = struct.Struct("<Q").unpack_from
     op_name = OP_NAMES.get
+    row_types = ROW_EVENT_TYPES
+    pushdown = (
+        only_tables is not None or only_ops is not None or min_row_offset > 0
+        or row_ts_min is not None or row_ts_max is not None
+    )
+    # TABLE_MAP body bytes → resolved map, for this call: MySQL re-sends
+    # an identical map before every row event, so a repeat costs one
+    # lookup here instead of the cross-call memo's key building.
+    maps_seen: dict[bytes, TableMapState] = {}
     while pos + HEADER_LEN <= data_len:
         ts, type_code, server_id, event_len, next_pos, flags = unpack_header(
             data, pos
@@ -2411,7 +2614,7 @@ def decode_binlog_incremental(
         # pushdown set skips image parsing entirely (but still passes
         # CRC framing below, and still consumes a seq slot so emitted
         # events match a full decode's numbering exactly).
-        skip_body = type_code in ROW_EVENT_TYPES and (
+        skip_body = pushdown and type_code in row_types and (
             (
                 only_tables is not None
                 and tmap is not None
@@ -2432,16 +2635,9 @@ def decode_binlog_incremental(
             or (row_ts_max is not None and ts > row_ts_max)
         )
         try:
-            if skip_body:
-                # A skipped frame never materializes its body bytes at
-                # all (r16): CRC framing reads the trailer straight
-                # from the backing buffer, so the pushdown skip costs
-                # one header unpack + one crc32 — no per-frame copy.
-                body = b""
-            else:
-                body = bytes(data[pos + HEADER_LEN:pos + event_len])
+            end = pos + event_len
             if type_code == FORMAT_DESCRIPTION_EVENT:
-                alg = _fde_checksum_alg(body)
+                alg = _fde_checksum_alg(bytes(data[pos + HEADER_LEN:end]))
                 ev["checksum_alg"] = "crc32" if alg == 1 else None
             if alg == 1 and event_len >= HEADER_LEN + 4:
                 # Trailer = CRC32 over header+body (not itself);
@@ -2449,22 +2645,35 @@ def decode_binlog_incremental(
                 # payload.  A mismatch is handled like any corrupt
                 # body: raise, or dead-letter in quarantine mode —
                 # the frame boundaries are still trustworthy.
-                expect = int.from_bytes(
-                    data[pos + event_len - 4:pos + event_len], "little"
-                )
-                actual = zlib.crc32(data[pos:pos + event_len - 4])
+                end -= 4
+                expect = int.from_bytes(data[end:end + 4], "little")
+                actual = zlib.crc32(data[pos:end])
                 if actual != expect:
                     raise ValueError(
                         f"CRC32 mismatch on {OP_NAMES.get(type_code, type_code)} "
                         f"at offset {base + pos}: "
                         f"stored {expect:#010x}, computed {actual:#010x}"
                     )
-                body = body[:-4]
+            # A skipped frame never materializes its body bytes at all
+            # (r16): the pushdown skip costs one header unpack + one
+            # crc32 — no per-frame copy.
             if not skip_body:
-                _decode_body(ev, type_code, body, catalog, tmap,
-                             only_tables, only_ops, images,
-                             min_row_offset, row_ts_min, row_ts_max,
-                             stringify)
+                body = bytes(data[pos + HEADER_LEN:end])
+                if type_code in row_types:
+                    _decode_rows(ev, type_code, body, tmap, images, stringify)
+                elif type_code == TABLE_MAP_EVENT:
+                    new_map = maps_seen.get(body)
+                    if new_map is None:
+                        new_map = maps_seen[body] = _table_map_for(body, catalog)
+                    ev["db"], ev["tbl"] = new_map.db, new_map.table
+                    tmap = new_map
+                elif type_code == XID_EVENT:
+                    ev["xid"] = unpack_xid(body, 0)[0]
+                else:
+                    _decode_body(ev, type_code, body, catalog, tmap,
+                                 only_tables, only_ops, images,
+                                 min_row_offset, row_ts_min, row_ts_max,
+                                 stringify)
         except Exception as exc:
             if on_error == "quarantine":
                 # Dead-letter the poison event and keep walking: the
@@ -2504,23 +2713,11 @@ def decode_binlog_incremental(
                 f"corrupt {OP_NAMES.get(type_code, type_code)} event at "
                 f"offset {base + pos}: {exc!r}"
             ) from exc
-        if skip_body:
-            # Dropped from the output; the frame still advances the
-            # walk and consumes one seq (parity with full decode).
-            seq += 1
-            rel_next = next_pos - base
-            if advance_by_length or rel_next <= pos:
-                pos = pos + event_len
-            else:
-                pos = rel_next
-            continue
-        if ev.get("_new_table_map") is not None:
-            tmap = ev.pop("_new_table_map")
-        inner = ev.pop("_inner_events", None)
-        inner_frames = ev.pop("_inner_frames", 0)
-        events.append(ev)
         seq += 1
-        if inner is not None:
+        if skip_body:
+            pass  # dropped from the output; the frame still took its seq
+        elif type_code == TRANSACTION_PAYLOAD_EVENT:
+            events.append(ev)
             # Splice a transaction payload's embedded events into the
             # stream; the payload decode already threaded the table
             # map and set absolute offsets.  Each inner event's local
@@ -2530,10 +2727,13 @@ def decode_binlog_incremental(
             # full decode even when pushdown dropped some frames; the
             # outer counter then advances by the payload's total frame
             # count, not by how many events survived the filter.
-            for iev in inner:
+            tmap = ev.pop("_new_table_map", tmap)
+            for iev in ev.pop("_inner_events"):
                 iev["seq"] = seq + iev["seq"]
                 events.append(iev)
-            seq += inner_frames
+            seq += ev.pop("_inner_frames")
+        else:
+            events.append(ev)
         # header's `next` is absolute in the containing log; inside an
         # extracted transaction payload those positions refer to the
         # ORIGINAL log and must be ignored (advance_by_length).
@@ -2559,15 +2759,12 @@ def _decode_body(
     row_ts_max: int | None = None,
     stringify: bool = False,
 ) -> None:
-    """Type-specific body decode into `ev`.  A new TABLE_MAP is handed
-    back via ev["_new_table_map"] (the caller threads it).
-
-    ``stringify=True`` decodes row images straight into the
-    MAP-envelope string form (string-mode compiled plans) — the
-    values are exactly ``stringify_image`` of the typed decode, fused
-    so envelope builders skip the per-image re-walk.  Partial-update
-    events still decode typed (the after-image is a JSON diff against
-    the typed before image) and stringify afterwards."""
+    """Body decode into `ev` for the event types the frame loop does
+    not handle itself (rows, TABLE_MAP and XID are decoded there).  A
+    transaction payload hands its spliced events and the table map it
+    ends on back via ev["_inner_events"] / ev["_inner_frames"] /
+    ev["_new_table_map"]; the pushdown and ``stringify`` arguments are
+    passed through to the payload's nested decode."""
     if type_code == QUERY_EVENT:
         # post-header: thread_id u32, exec_time u32, db_len u8,
         # error_code u16, status_vars_len u16 (v4).  The reference
@@ -2581,113 +2778,6 @@ def _decode_body(
         p = 13 + sv_len
         ev["db"] = body[p:p + db_len].decode("latin-1")
         ev["sql"] = body[p + db_len + 1:].decode("latin-1")
-    elif type_code == TABLE_MAP_EVENT:
-        new_map = _table_map_for(body, catalog)
-        ev["db"], ev["tbl"] = new_map.db, new_map.table
-        ev["_new_table_map"] = new_map
-    elif type_code in (
-        WRITE_ROWS_EVENT, UPDATE_ROWS_EVENT, DELETE_ROWS_EVENT,
-        WRITE_ROWS_EVENT_V2, UPDATE_ROWS_EVENT_V2, DELETE_ROWS_EVENT_V2,
-        PARTIAL_UPDATE_ROWS_EVENT,
-    ):
-        if tmap is None:
-            raise ValueError("row event without preceding TABLE_MAP")
-        ev["db"], ev["tbl"] = tmap.db, tmap.table
-        p = 8  # table_id(6) + flags(2)
-        if type_code >= WRITE_ROWS_EVENT_V2:
-            # v2 post-header (MySQL >=5.6, incl. PARTIAL_UPDATE 39):
-            # extra-row-info length u16 INCLUDING its own two bytes;
-            # skip the optional payload (NDB info / partition info)
-            # real servers may emit.
-            extra_len = int.from_bytes(body[8:10], "little")
-            if extra_len < 2:
-                raise ValueError(f"rows v2 extra-data length {extra_len} < 2")
-            p = 8 + extra_len
-        n_cols, p = read_packed_int(body, p)
-        # A real row event's declared width always equals its table
-        # map's column count; disagreement means a corrupt body.
-        # Without this check a garbage width silently skips the whole
-        # row section (the bitmap slice overshoots the body) and the
-        # event decodes as an EMPTY row set — worse than failing.
-        if n_cols != len(tmap.col_types):
-            raise ValueError(
-                f"row event declares {n_cols} columns, "
-                f"table map has {len(tmap.col_types)}"
-            )
-        is_partial = type_code == PARTIAL_UPDATE_ROWS_EVENT
-        is_update = is_partial or type_code in (
-            UPDATE_ROWS_EVENT, UPDATE_ROWS_EVENT_V2
-        )
-        is_write = type_code in (WRITE_ROWS_EVENT, WRITE_ROWS_EVENT_V2)
-        bm_bytes = (n_cols + 7) // 8
-        used1 = body[p:p + bm_bytes]; p += bm_bytes
-        used2 = None
-        if is_update:
-            used2 = body[p:p + bm_bytes]; p += bm_bytes
-        # Projection pruning below decode (`images=` pushdown): a side
-        # the projection never reads is WIDTH-WALKED, not decoded —
-        # row cardinality, row_idx and frame alignment stay exact, the
-        # pruned side's rows surface as None placeholders.  PARTIAL
-        # after-images are JSON diffs against the before image, so
-        # partial events always decode fully and apply the placeholder
-        # contract afterwards (prune is then not-faster, never wrong).
-        need_b = images in ("both", "before") or is_partial
-        need_a = images in ("both", "after") or is_partial
-        # plan for image 1 (write_rows' single image IS the after side)
-        want1 = need_a if is_write else need_b
-        use_str = stringify and not is_partial
-        plan1 = _image_plan(tmap, used1, use_str) if want1 else None
-        skip1 = None if want1 else _skip_plan(tmap, used1)
-        plan2 = skip2 = None
-        if is_update and not is_partial:
-            plan2 = _image_plan(tmap, used2, use_str) if need_a else None
-            skip2 = None if need_a else _skip_plan(tmap, used2)
-        rows_before, rows_after = [], []
-        body_len = len(body)
-        while p < body_len:
-            p0 = p
-            if plan1 is not None:
-                img1, p = plan1(body, p)
-            else:
-                img1, p = None, skip1(body, p)
-            if is_partial:
-                img2, p = _read_partial_image(body, p, tmap, used2, img1)
-                rows_before.append(img1); rows_after.append(img2)
-            elif is_update:
-                if plan2 is not None:
-                    img2, p = plan2(body, p)
-                else:
-                    img2, p = None, skip2(body, p)
-                rows_before.append(img1); rows_after.append(img2)
-            elif is_write:
-                rows_after.append(img1)
-            else:
-                rows_before.append(img1)
-            if p <= p0:  # zero-width image on a non-empty tail = corrupt
-                raise ValueError("row image consumed no bytes")
-        if (skip1 is not None or skip2 is not None) and p != body_len:
-            # a width walk that overshoots the body means skipper/
-            # decoder width divergence or corruption — surface it, a
-            # silent overshoot would drop rows the full decode keeps
-            raise ValueError(
-                f"row section misparse under image pruning: walked to "
-                f"{p}, body is {body_len}"
-            )
-        if is_partial and images != "both":
-            n = len(rows_before)
-            if images in ("after", "none"):
-                rows_before = [None] * n
-            if images in ("before", "none"):
-                rows_after = [None] * n
-        if stringify and is_partial:
-            # partial events decoded typed (diff base) — convert now so
-            # the event's string contract matches the string-mode plans
-            rows_before = [stringify_image(r) for r in rows_before]
-            rows_after = [stringify_image(r) for r in rows_after]
-        ev["before"] = rows_before or None
-        ev["after"] = rows_after or None
-    elif type_code == XID_EVENT:
-        ev["xid"] = struct.unpack_from("<Q", body, 0)[0]
     elif type_code == ROWS_QUERY_EVENT:
         # binlog_rows_query_log_events=ON: the ORIGINAL statement text
         # for the row events that follow (post-header: 1-byte length,

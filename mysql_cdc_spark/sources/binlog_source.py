@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from mysql_cdc_spark.sources.binlog_codec import (
     DELETE_ROWS_EVENT,
+    ENVELOPE_OPS,
     TYPE_BIT,
     TYPE_BLOB,
     TYPE_DATE,
@@ -168,12 +169,6 @@ BINLOG_ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-_ENVELOPE_OPS = (
-    "query", "table_map", "write_rows", "update_rows", "delete_rows", "xid",
-    "quarantine", "gtid", "previous_gtids", "rows_query",
-)
-
-
 def _IDENTITY(image):
     # stringified=True fast path: the codec already emitted the string
     # form (decode_binlog(..., stringify=True)); nothing to re-walk
@@ -211,42 +206,44 @@ def envelope_records(
     MAP-envelope string form, so the per-image `stringify_image` walk is
     skipped (r19 §4: one dict build per image, not two).
     """
-    sfy = _IDENTITY if stringified else stringify_image
     out: list[dict] = []
     seq = seq_start
     for ev in events:
-        if ev["op"] not in _ENVELOPE_OPS:
+        op = ev["op"]
+        if op not in ENVELOPE_OPS:
             continue
-        if ev["op"].endswith("_rows"):
+        if op.endswith("_rows"):
             if (
                 only_tables is not None
                 and (ev["db"], ev["tbl"]) not in only_tables
             ):
                 continue
-            if only_ops is not None and ev["op"] not in only_ops:
+            if only_ops is not None and op not in only_ops:
                 continue
-        base = {
-            "log_file": log_file, "seq": seq, "offset": ev["offset"],
-            "ts": ev["ts"], "server_id": ev["server_id"],
-            "xid": ev["xid"], "db": ev["db"], "tbl": ev["tbl"],
-            "op": ev["op"], "row_idx": 0,
-            "before": None, "after": None, "sql": ev["sql"],
-            "thread_id": ev.get("thread_id"),
-            "exec_time": ev.get("exec_time"),
-            "error_code": ev.get("error_code"),
-        }
-        seq += 1
-        if ev["op"].endswith("_rows"):
-            before = ev["before"] or []
-            after = ev["after"] or []
-            for ri in range(max(len(before), len(after))):
-                rec = dict(base)
-                rec["row_idx"] = ri
-                rec["before"] = sfy(before[ri]) if ri < len(before) else None
-                rec["after"] = sfy(after[ri]) if ri < len(after) else None
-                out.append(rec)
+            before = ev["before"] or ()
+            after = ev["after"] or ()
+            if not stringified:
+                before = [stringify_image(r) for r in before]
+                after = [stringify_image(r) for r in after]
+            n = max(len(before), len(after))
         else:
-            out.append(base)
+            before = after = ()
+            n = 1
+        nb, na = len(before), len(after)
+        for ri in range(n):
+            out.append({
+                "log_file": log_file, "seq": seq, "offset": ev["offset"],
+                "ts": ev["ts"], "server_id": ev["server_id"],
+                "xid": ev["xid"], "db": ev["db"], "tbl": ev["tbl"],
+                "op": op, "row_idx": ri,
+                "before": before[ri] if ri < nb else None,
+                "after": after[ri] if ri < na else None,
+                "sql": ev["sql"],
+                "thread_id": ev.get("thread_id"),
+                "exec_time": ev.get("exec_time"),
+                "error_code": ev.get("error_code"),
+            })
+        seq += 1
     return out, seq
 
 
@@ -273,9 +270,9 @@ def envelope_columns(
 ) -> tuple[dict[str, list], int]:
     """`envelope_records` in COLUMNAR form (r15 VERDICT #1): one list
     per envelope column, appended in a single pass — no per-record
-    dict allocation and no dict(base) copy per row image, and the
-    scans build their Arrow batch from dict-of-lists (one typed array
-    per column) instead of re-inferring a list-of-dicts.  Content parity
+    dict allocation, and the scans build their Arrow batch from
+    dict-of-lists (one typed array per column) instead of re-inferring
+    a list-of-dicts.  Content parity
     with `envelope_records` is pinned by test; the record form stays
     for the push delivery (per-event callbacks).
 
@@ -306,7 +303,7 @@ def envelope_columns(
     seq = seq_start
     for ev in events:
         op = ev["op"]
-        if op not in _ENVELOPE_OPS:
+        if op not in ENVELOPE_OPS:
             continue
         is_rows = op.endswith("_rows")
         if is_rows:

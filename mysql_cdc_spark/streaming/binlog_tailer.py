@@ -10,12 +10,14 @@ turns, and hands the batch to `event_fn`.  A ROTATE event switches to
 the named next log, resets the offset to 4 (past the magic) and clears
 the table-map — exactly the reference's rotation rule (:888-905).
 
-This is the driver-side ingest half for real byte logs; the decoded
-batches become DataFrames via `spark.createDataFrame` (or are appended
-to the parquet event-log consumed by streaming/runtime.py, which then
-provides checkpointing/backpressure/sinks).  Where the reference used
-inotify (:833-857), `run()` polls — the Structured-Streaming analog of
-a trigger interval.
+This is the in-process ingest half for real byte logs: the push
+delivery (streaming/push.py) envelopes each batch into a bounded
+queue, and the latency probe (streaming/latency.py) times its turns.
+The durable, checkpointed
+path does not go through it — Spark reads binlog bytes only through
+the `mysql_binlog` streaming source (sources/binlog_datasource.py).
+Where the reference used inotify (:833-857), `run()` polls; the push
+delivery calls `turn()` on inotify wakes instead.
 """
 
 from __future__ import annotations
@@ -25,14 +27,10 @@ import time
 from collections.abc import Callable
 
 from mysql_cdc_spark.sources.binlog_codec import (
+    ENVELOPE_OPS,
     MAGIC,
     TableMapState,
     decode_binlog_incremental,
-)
-
-_ENVELOPE_OPS = (
-    "query", "table_map", "write_rows", "update_rows", "delete_rows", "xid",
-    "quarantine", "gtid", "previous_gtids", "rows_query",
 )
 
 
@@ -160,14 +158,16 @@ class BinlogTailer:
 
             rotate_to = None
             batch = []
+            log_file = self.current_log
             for ev in events:
-                if ev["op"] == "format_description":
-                    self.checksum = ev.get("checksum_alg")
-                if ev["op"] == "rotate":
-                    rotate_to = ev["sql"]    # next log file name
-                elif ev["op"] in _ENVELOPE_OPS:
-                    ev["log_file"] = self.current_log
+                op = ev["op"]
+                if op in ENVELOPE_OPS:       # nearly every event
+                    ev["log_file"] = log_file
                     batch.append(ev)
+                elif op == "rotate":
+                    rotate_to = ev["sql"]    # next log file name
+                elif op == "format_description":
+                    self.checksum = ev.get("checksum_alg")
             if rotate_to is not None:
                 # reference cdc-log-rotation (:888-905): new file,
                 # offset 4, table-map cleared.  Applied BEFORE the

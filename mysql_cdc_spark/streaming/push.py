@@ -27,18 +27,20 @@ without JNotify/JDBC:
   malformed bytes raise or quarantine exactly as without the filter —
   and images arrive from the codec already in envelope string form.
 
-Division of labor with streaming/runtime.py: the Structured-Streaming
-path (parquet event-log → file-stream source → sinks) is the DURABLE,
-replayable, cluster-scale path with checkpointing — but it pays the
-micro-batch scheduling floor (~0.2 s/turn measured).  This module is
-the LOW-LATENCY in-process path (ms/turn): same tailer, same codec,
-no Spark job per turn.  Run both off one log for durability + latency.
+Division of labor with the `mysql_binlog` stream
+(`spark.readStream.format("mysql_binlog")`, sources/binlog_datasource.py):
+that Structured-Streaming source is the DURABLE, replayable,
+cluster-scale path with checkpointing — but it pays the micro-batch
+scheduling floor (a Spark job per turn, ~0.4 s measured).  This module
+is the LOW-LATENCY in-process path (ms/turn): same codec, no Spark job
+per turn.  Run both off one log for durability + latency.
 """
 
 from __future__ import annotations
 
 import ctypes
 import ctypes.util
+import functools
 import os
 import queue
 import select
@@ -58,6 +60,14 @@ _IN_MASK = IN_MODIFY | IN_CLOSE_WRITE | IN_MOVED_TO | IN_CREATE
 _IN_NONBLOCK = 0o4000  # O_NONBLOCK
 
 
+@functools.cache
+def _libc() -> ctypes.CDLL:
+    """libc, loaded once per process: `find_library` spawns
+    `ldconfig -p`, which a cursor open must not pay twice."""
+    return ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6",
+                       use_errno=True)
+
+
 class INotifyWatcher:
     """Minimal inotify wrapper: watch one directory, block in
     `wait(timeout)` until anything in it changes.  `available()` is
@@ -65,8 +75,7 @@ class INotifyWatcher:
     back to polling."""
 
     def __init__(self, path: str) -> None:
-        libc_name = ctypes.util.find_library("c") or "libc.so.6"
-        self._libc = ctypes.CDLL(libc_name, use_errno=True)
+        self._libc = _libc()
         self.fd = self._libc.inotify_init1(_IN_NONBLOCK)
         if self.fd < 0:
             raise OSError(ctypes.get_errno(), "inotify_init1 failed")
@@ -83,8 +92,7 @@ class INotifyWatcher:
         if not os.path.exists("/proc/sys/fs/inotify"):
             return False
         try:
-            libc = ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6")
-            return hasattr(libc, "inotify_init1")
+            return hasattr(_libc(), "inotify_init1")
         except OSError:
             return False
 
@@ -147,7 +155,6 @@ class PushDelivery:
         poll_fallback_seconds: float = 0.05,
         on_error: str = "raise",
         journal_path: str | None = None,
-        only_tables: set[tuple[str, str]] | None = None,
     ) -> None:
         self.queue: queue.Queue[list[dict]] = queue.Queue(maxsize=queue_size)
         self._stop = threading.Event()
@@ -157,9 +164,11 @@ class PushDelivery:
         self.error: BaseException | None = None
         # Images come out of the codec in envelope string form, so
         # `_deliver` envelopes with stringified=True (no second walk).
+        # No codec pushdown: decode stays full, so a malformed
+        # foreign-table body still raises or quarantines.
         self.tailer = BinlogTailer(
             log_dir, first_log, self._deliver, catalog, on_error=on_error,
-            only_tables=only_tables, stringify=True,
+            stringify=True,
         )
         # (db, table, row ops) the statement surfaces; None delivers
         # every envelope record.  Set through `filter_rows`.
