@@ -1,14 +1,20 @@
 """``mysql_binlog`` Spark DataSource (PySpark 4 Python Data Source API).
 
 ``spark.read.format("mysql_binlog").load(dir)`` scans a rotated binlog
-directory into the generic envelope with ONE input partition per log
-file (decode is inherently serial within a file — events are
-offset-chained and table-map state threads through — and
-embarrassingly parallel across files), and
+directory into the generic envelope, and
 ``spark.readStream.format("mysql_binlog").load(dir)`` tails the same
 directory as a Structured Streaming source: frame-aligned offsets are
 checkpointed in Spark's own offset WAL (exactly-once on restart),
 planning is driver-side and decode is executor-side.
+
+Both readers plan and decode one unit, the frame-aligned byte slice
+``(file, [start, end))``: a batch scan is a stream over a fixed offset
+range.  Decode is serial within a file — events are offset-chained
+and table-map state threads through — and embarrassingly parallel
+across files, so a batch file is the slice ``[4, size)``, a trigger
+plans one slice per file in its range, small files bin-pack several
+slices into one task and an oversized file splits into slices that
+decode from state shipped at their start.
 
 This is the Spark-native form of the reference's streaming surface — a
 driver-side tailer pushing decoded events into a bounded queue
@@ -60,6 +66,7 @@ import json
 import os
 from bisect import bisect_left
 from dataclasses import dataclass
+from operator import itemgetter
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -114,33 +121,6 @@ _DATA_START = 4
 # (unless the 1 MB per-pack floor binds first): keeps pruned/small
 # scans parallel while pack_bytes bounds per-task work at scale.
 _PACK_MIN_FANOUT = 128
-
-
-def _bin_pack(items: list, sizes: list, pack_bytes: int) -> list:
-    """Greedy order-preserving bin-pack shared by the batch scan and
-    the stream catch-up planner.  Per-bin target =
-    min(pack_bytes, max(1 MB floor, total / _PACK_MIN_FANOUT)):
-    pack_bytes caps per-task decode work at scale, the fan-out floor
-    keeps small/pruned scans parallel, and an explicit pack_bytes
-    below the floor is honored as given.  Returns a list of bins
-    (lists of items)."""
-    total = sum(sizes)
-    target = min(
-        pack_bytes,
-        max(min(1_000_000, pack_bytes), total // _PACK_MIN_FANOUT),
-    )
-    bins: list = []
-    cur: list = []
-    acc = 0
-    for it, sz in zip(items, sizes):
-        if cur and acc + sz > target:
-            bins.append(cur)
-            cur, acc = [], 0
-        cur.append(it)
-        acc += sz
-    if cur:
-        bins.append(cur)
-    return bins
 
 # IsNotNull(col) → the set of ROW ops that can satisfy it.  Envelope
 # row-change rows never carry sql/xid (those live on query/xid/gtid/...
@@ -233,10 +213,10 @@ class _Opts:
             raise ValueError(
                 "since_gtid and since_file are mutually exclusive"
             )
-        # "0" disables, like the sibling knobs (list_reconcile_
-        # triggers, pack_bytes): a literal zero budget would
-        # otherwise pin the frame-widening loops at want=0 — an
-        # infinite driver-side loop, not a cap.
+        # "0" disables, like the sibling knobs (split_bytes,
+        # pack_bytes): a literal zero budget would otherwise pin the
+        # frame-widening walk at want=0 — an infinite driver-side
+        # loop, not a cap.
         mb = options.get("max_bytes_per_batch")
         self.max_bytes = int(mb) if mb is not None else None
         if self.max_bytes is not None and self.max_bytes <= 0:
@@ -273,14 +253,6 @@ class _Opts:
             )
         else:
             self.columns = None
-        # Incremental discovery reconcile cadence (r18 VERDICT #1):
-        # steady-state triggers probe the dense rotated namespace
-        # forward (O(new files)); every N triggers a full listing
-        # re-syncs.  "0" disables probing — every trigger full-lists
-        # (the pre-r19 behavior; the A/B knob ds_bench uses).
-        self.list_reconcile = int(
-            options.get("list_reconcile_triggers", "64")
-        )
 
     @property
     def images(self) -> str:
@@ -337,27 +309,21 @@ def _arrow_batch(cols: dict[str, list], columns: list[str] | None = None):
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _cut_offset_prefix(cols: dict[str, list], min_offset: int) -> dict[str, list]:
-    """Drop records with offset < min_offset.  Envelope offsets are
-    non-decreasing within one file's decode, so this is a bisect +
-    slice, not a scan."""
-    i = bisect_left(cols["offset"], min_offset)
-    if i == 0:
-        return cols
-    return {c: v[i:] for c, v in cols.items()}
-
-
 # ---------------------------------------------------------------------------
-# Batch reader
+# Slices: the one unit both readers plan and decode
 # ---------------------------------------------------------------------------
 
 
 @dataclass
 class _StreamPartition(InputPartition):
-    """One (file, [start, end)) byte slice.  ``alg``/``tmap`` carry the
-    decoder state at ``start`` when the driver planned this slice from
-    its live walk; ``prefix_replay`` is the restart path — the executor
-    rebuilds state from the file head (state never crosses files)."""
+    """One (file, [start, end)) frame-aligned byte slice — the only
+    unit either reader plans or decodes: a whole batch file is the
+    slice ``[4, size)``, a stream trigger plans one slice per file in
+    its offset range, and ``split_bytes`` cuts an oversized file into
+    several.  ``alg``/``tmap`` carry the decoder state at ``start``
+    when the driver planned this slice from a walk; ``prefix_replay``
+    is the restart path — the executor rebuilds state from the file
+    head (state never crosses files)."""
 
     path: str
     log_file: str
@@ -372,6 +338,46 @@ class _StreamPartition(InputPartition):
     # one whole-file decode would (r16 ADVICE: slice-local seq
     # collided within one log_file)
     seq_base: int = 0
+
+
+@dataclass
+class _PackedStreamPartition(InputPartition):
+    """Several whole-file slices in one task.  A directory of
+    thousands of sub-MB files (fixture and archive directories, a deep
+    stream backlog) would otherwise be task-overhead-bound; decode
+    state never crosses files, so packing is pure scheduling — each
+    slice decodes on its own and emits its own arrow batch."""
+
+    slices: list  # [_StreamPartition, ...]
+
+
+def _pack(whole: list[_StreamPartition], pack_bytes: int) -> list:
+    """Greedy rotation-order bin-pack of whole-file slices, the one
+    packing path of the batch scan and the stream catch-up planner;
+    ``pack_bytes <= 0`` disables.  Per-bin target =
+    min(pack_bytes, max(1 MB floor, total / _PACK_MIN_FANOUT)):
+    pack_bytes caps per-task decode work at scale, the fan-out floor
+    keeps small/pruned scans parallel, and an explicit pack_bytes
+    below the floor is honored as given.  Measured (PLANS r17): the
+    x100 scan was task-wave-bound at one partition per file, and a
+    first cut WITHOUT the fan-out floor serialized a pruned 20 MB scan
+    onto one core."""
+    if pack_bytes <= 0 or len(whole) < 2:
+        return list(whole)
+    sizes = [s.end for s in whole]  # a whole-file slice reads [0, end)
+    target = min(
+        pack_bytes,
+        max(min(1_000_000, pack_bytes), sum(sizes) // _PACK_MIN_FANOUT),
+    )
+    bins: list[list[_StreamPartition]] = []
+    acc = 0
+    for s, sz in zip(whole, sizes):
+        if not bins or acc + sz > target:
+            bins.append([])
+            acc = 0
+        bins[-1].append(s)
+        acc += sz
+    return [_PackedStreamPartition(b) if len(b) > 1 else b[0] for b in bins]
 
 
 def _resolve_since_gtid(o: _Opts) -> None:
@@ -441,11 +447,56 @@ def _file_first_ts(path: str) -> int | None:
 
 
 def _scan_state_events(events: list[dict], alg: str | None) -> str | None:
-    """Fold FDE declarations out of a state walk's event list."""
+    """Fold FDE declarations out of a walk's event list."""
     for ev in events:
         if "checksum_alg" in ev:
             alg = ev["checksum_alg"]
     return alg
+
+
+def _walk_window(
+    fh,
+    start: int,
+    limit: int,
+    want: int,
+    alg: str | None,
+    tmap: TableMapState | None,
+    seq: int,
+    catalog: dict,
+    on_error: str,
+) -> tuple[int, str | None, TableMapState | None, int]:
+    """State-only walk of the frames in ``[start, start + want)``
+    (capped at ``limit``) of the open file ``fh``, from the decoder
+    state (``alg``, ``tmap``, ``seq``) at ``start``.  Row images skip
+    through the codec's ``only_ops=frozenset()`` pushdown; headers,
+    CRC framing, FDE and TABLE_MAP bodies still decode, so the result
+    ``(next, alg, tmap, seq)`` is the exact decoder state at a frame
+    boundary.  A head walk reads from byte 0 with fresh state, so the
+    magic check and the FDE checksum autodetect run from a clean slate.
+
+    A window holding no complete frame doubles until one frame
+    decodes or the window reaches ``limit`` (floored at 1, so a
+    degenerate budget can never pin the loop): a budget smaller than
+    one frame would otherwise return without advancing, and every
+    later call would repeat it — the silent-stall mode (r16 ADVICE).
+    Serves split planning (``on_error="quarantine"``) and the stream
+    planner (the user's ``on_error``: a raise-mode corrupt frame fails
+    at plan time, before the offset WAL advances past it)."""
+    if start <= _DATA_START:
+        start, alg, tmap, seq = _DATA_START, None, None, 0
+        base = 0
+    else:
+        base = start
+    while True:
+        fh.seek(base)
+        data = fh.read(min(start + want, limit) - base)
+        events, nxt, out_tmap, out_seq = decode_binlog_incremental(
+            data, start, tmap, catalog, base=base, on_error=on_error,
+            checksum=alg, only_ops=frozenset(), seq_base=seq,
+        )
+        if nxt > start or start + want >= limit:
+            return nxt, _scan_state_events(events, alg), out_tmap, out_seq
+        want = max(want, 1) * 2
 
 
 def _decode_slice(
@@ -456,80 +507,117 @@ def _decode_slice(
     only_ops,
     images: str = "both",
     stringify: bool = False,
+    *,
+    min_row_offset: int = 0,
+    max_offset: int | None = None,
+    row_ts_min: int | None = None,
+    row_ts_max: int | None = None,
 ) -> list[dict]:
-    """Decode one frame-aligned byte slice on an executor.  Shared by
-    the streaming reader and the batch reader's oversized-file splits:
-    a file-head slice decodes fresh; a mid-file slice decodes from the
-    shipped (checksum, table-map) state; `prefix_replay` (driver
-    restart lost the planned state) rebuilds it from THIS file's head
-    — state resets at rotation, so one file bounds the replay."""
-    if part.start <= _DATA_START:
-        with open(part.path, "rb") as fh:
-            data = fh.read(part.end)
-        events, _, _, _ = decode_binlog_incremental(
-            data,
-            _DATA_START,
-            None,
-            catalog,
-            on_error=on_error,
-            only_tables=only_tables,
-            only_ops=only_ops,
-            images=images,
-            stringify=stringify,
-        )
-        return events
-    if not part.prefix_replay:
-        with open(part.path, "rb") as fh:
-            fh.seek(part.start)
-            data = fh.read(part.end - part.start)
-        events, _, _, _ = decode_binlog_incremental(
-            data,
-            part.start,
-            part.tmap,
-            catalog,
-            base=part.start,
-            on_error=on_error,
-            checksum=part.alg,
-            only_tables=only_tables,
-            only_ops=only_ops,
-            seq_base=part.seq_base,
-            images=images,
-            stringify=stringify,
-        )
-        return events
+    """Decode every frame that starts in one slice's ``[start, end)``
+    — the one decoder behind both readers.
+
+    A slice at the file head, or one marked ``prefix_replay`` (a driver
+    restart lost its planned state), decodes from the file head: state
+    resets at rotation, so one file bounds the replay.  Any other slice
+    decodes from its shipped (checksum, table-map, seq) state.
+
+    Records below the keep offset — the slice start, or
+    ``min_row_offset`` (the batch scan's since cut on the boundary file
+    and a pushed ``offset >=`` bound) — are dropped, and the codec
+    skips their row images.  ``max_offset`` (a pushed ``offset <=``
+    bound) stops the READ at the last frame that can pass it (frame
+    starts are the envelope offsets, monotone by construction) and
+    completes the one frame that straddles it.  ``row_ts_min``/
+    ``row_ts_max`` skip the images of row frames outside a pushed
+    ``ts`` range.  Offset and ts pushdown are partial: Spark re-filters
+    every row, so they only save decode work."""
+    keep = max(part.start, min_row_offset)
+    if part.start <= _DATA_START or part.prefix_replay:
+        base, pos, alg, tmap, seq = 0, _DATA_START, None, None, 0
+    else:
+        base, pos = part.start, part.start
+        alg, tmap, seq = part.alg, part.tmap, part.seq_base
+    stop = part.end
+    if max_offset is not None:
+        # clamp to the magic: a bound below it (offset <= 0) must
+        # yield an EMPTY scan, not a bad-magic error
+        stop = min(stop, max(max_offset + 1, _DATA_START))
+    events: list[dict] = []
     with open(part.path, "rb") as fh:
-        data = fh.read(part.end)
-    events, nxt, _, _ = decode_binlog_incremental(
-        data,
-        _DATA_START,
-        None,
-        catalog,
-        on_error=on_error,
-        only_tables=only_tables,
-        only_ops=only_ops,
-        images=images,
-        stringify=stringify,
-    )
-    if nxt < part.end:
+        fh.seek(base)
+        data = fh.read(max(stop - base, 0))
+        while True:
+            got, nxt, tmap, seq = decode_binlog_incremental(
+                data,
+                pos,
+                tmap,
+                catalog,
+                base=base,
+                on_error=on_error,
+                checksum=alg,
+                only_tables=only_tables,
+                only_ops=only_ops,
+                seq_base=seq,
+                images=images,
+                # the codec's range test runs per frame only when set
+                min_row_offset=keep if keep > pos else 0,
+                row_ts_min=row_ts_min,
+                row_ts_max=row_ts_max,
+                stringify=stringify,
+            )
+            events += got
+            if stop == part.end or nxt >= stop:
+                break
+            # one frame starts at or below max_offset but runs past the
+            # bounded read: complete exactly that frame (its successor
+            # starts past the bound, so one round suffices)
+            alg = _scan_state_events(got, alg)
+            fh.seek(nxt + 9)
+            flen = int.from_bytes(fh.read(4), "little")
+            fh.seek(nxt)
+            data = fh.read(min(flen, part.end - nxt))
+            base = pos = nxt
+            stop = part.end
+    if part.prefix_replay and nxt < part.end:
         raise ValueError(
             f"offset {part.end} of {part.log_file} is not "
             f"frame-aligned (walk stopped at {nxt})"
         )
-    return [ev for ev in events if ev["offset"] >= part.start]
+    i = bisect_left(events, keep, key=itemgetter("offset"))
+    return events[i:] if i else events
+
+
+def _slices(partition) -> list[_StreamPartition]:
+    """The slices one planned partition decodes, in order."""
+    if isinstance(partition, _PackedStreamPartition):
+        return partition.slices
+    return [partition]
+
+
+def _slice_batch(sl: _StreamPartition, o: _Opts, only_tables, only_ops,
+                 **pushdown):
+    """One slice → one arrow RecordBatch of (projected) envelope rows."""
+    events = _decode_slice(
+        sl, o.catalog, o.on_error, only_tables, only_ops, o.images,
+        stringify=True, **pushdown,
+    )
+    cols, _ = envelope_columns(
+        events, sl.log_file, frame_seq=True, stringified=True
+    )
+    return _arrow_batch(cols, o.columns)
 
 
 def _split_file(
     path: str, catalog: dict, split_bytes: int, end: int | None = None
 ) -> list[_StreamPartition]:
     """Frame-aligned split plan for ONE oversized log file: a driver
-    state-only walk (row images skipped via the ``only_ops=frozenset()``
-    pushdown — headers, CRC framing, FDE and TABLE_MAP bodies still
-    decode) captures (offset, checksum, table-map) at ~``split_bytes``
-    boundaries, so executors decode the slices IN PARALLEL from shipped
-    state.  Real binlogs rotate at max_binlog_size (~1 GB), but an
-    operator who raised it should not be stuck with one 100 GB task:
-    the serial planner walk costs one state-pass; the decode fans out.
-    A frame larger than the window widens the read until it fits."""
+    state-only walk (:func:`_walk_window`) captures (offset, checksum,
+    table-map, seq) at ~``split_bytes`` boundaries, so executors decode
+    the slices IN PARALLEL from shipped state.  Real binlogs rotate at
+    max_binlog_size (~1 GB), but an operator who raised it should not
+    be stuck with one 100 GB task: the serial planner walk costs one
+    state-pass; the decode fans out.  A frame larger than the window
+    widens the read until it fits."""
     size = os.path.getsize(path)
     if end is not None:
         size = min(size, end)
@@ -541,79 +629,34 @@ def _split_file(
     seq: int = 0
     with open(path, "rb") as fh:
         while pos < size:
-            start = pos
-            start_alg, start_tmap, start_seq = alg, tmap, seq
-            want = split_bytes
-            while True:
-                if start <= _DATA_START:
-                    fh.seek(0)
-                    data = fh.read(min(_DATA_START + want, size))
-                    events, nxt, tmap, seq = decode_binlog_incremental(
-                        data, _DATA_START, None, catalog,
-                        on_error="quarantine", only_ops=frozenset(),
-                    )
-                else:
-                    fh.seek(start)
-                    data = fh.read(min(want, size - start))
-                    events, nxt, tmap, seq = decode_binlog_incremental(
-                        data, start, start_tmap, catalog, base=start,
-                        on_error="quarantine", checksum=start_alg,
-                        only_ops=frozenset(), seq_base=start_seq,
-                    )
-                if nxt > start or start + want >= size:
-                    break
-                # one frame larger than the window: widen (floored at
-                # 1 so a degenerate budget can never pin the loop)
-                want = max(want, 1) * 2
-            alg = _scan_state_events(events, alg)
-            if nxt <= start:
+            nxt, n_alg, n_tmap, n_seq = _walk_window(
+                fh, pos, size, split_bytes, alg, tmap, seq, catalog,
+                "quarantine",
+            )
+            if nxt <= pos:
                 # torn tail / header-less remainder: nothing further
                 # is decodable, and the last slice already covers
                 # every complete frame
                 break
             slices.append(
-                _StreamPartition(
-                    path, name, start, nxt, start_alg, start_tmap,
-                    seq_base=start_seq,
-                )
+                _StreamPartition(path, name, pos, nxt, alg, tmap, seq_base=seq)
             )
-            pos = nxt
+            pos, alg, tmap, seq = nxt, n_alg, n_tmap, n_seq
     return slices
 
 
-
-
-@dataclass
-class _FilePartition(InputPartition):
-    """One whole binlog file; ``cut`` drops envelope records before the
-    journaled resume offset on the `since` boundary file."""
-
-    path: str
-    cut: int = 0
-
-
-@dataclass
-class _PackedPartition(InputPartition):
-    """Several whole small files in one task (greedy bin-pack to
-    ~pack_bytes): decode state never crosses files, so packing is pure
-    scheduling — each file still decodes independently and emits its
-    own arrow batch."""
-
-    files: list  # [(path, cut), ...]
-
-
-@dataclass
-class _PackedStreamPartition(InputPartition):
-    """The stream-side twin: several whole-file catch-up slices in one
-    task.  A deep backlog (thousands of rotated files in one trigger's
-    range) hits the same task-wave floor the batch scan did; packing
-    is again pure scheduling — each slice decodes independently."""
-
-    slices: list  # [_StreamPartition, ...]
+# ---------------------------------------------------------------------------
+# Batch reader
+# ---------------------------------------------------------------------------
 
 
 class _BinlogBatchReader(DataSourceReader):
-    """Partition-per-file batch scan with partial Catalyst pushdown.
+    """Batch scan over frame-aligned slices with partial Catalyst
+    pushdown.  Each log file is the slice ``[4, size)``; small files
+    bin-pack into one task (``pack_bytes``) and an oversized file
+    splits at frame boundaries (``split_bytes``).  Every slice decodes
+    through :func:`_decode_slice`, the stream reader's decoder, so
+    split slices get the same pushdown as whole files.
 
     ``pushFilters`` records what the codec can exploit and returns
     EVERY filter back to Spark (partial pushdown):
@@ -629,9 +672,9 @@ class _BinlogBatchReader(DataSourceReader):
       ``after`` only on write/update) → an ``only_ops`` constraint —
       e.g. ``after IS NOT NULL`` skips every delete image;
     * ``offset`` ranges → the frame walk's natural cut: an upper
-      bound stops the file READ at the last needed frame (the same
-      machinery ``since=`` uses), a lower bound skips image parsing
-      below it;
+      bound stops each slice's READ at the last needed frame, and a
+      lower bound is the keep offset ``since=`` also uses — frames
+      below it skip image parsing and their records drop;
     * ``ts`` ranges → row frames outside the bounds skip image
       parsing, and whole files outside the bounds are pruned
       driver-side from an O(1) first-event-timestamp peek (the
@@ -792,51 +835,26 @@ class _BinlogBatchReader(DataSourceReader):
             and self._o.ts_file_pruning
         ):
             paths = self._prune_by_ts(paths)
-        out: list[InputPartition] = []
-        whole: list[tuple[str, int, int]] = []  # (path, cut, size)
+        split: list[_StreamPartition] = []
+        whole: list[_StreamPartition] = []
         for p in paths:
-            cut = (
-                o.since_offset
-                if o.since_file is not None
-                and os.path.basename(p) == o.since_file
-                else 0
-            )
+            name = os.path.basename(p)
             size = os.path.getsize(p)
-            if (
-                o.split_bytes is not None
-                and size > o.split_bytes * 2
-            ):
+            if o.split_bytes is not None and size > o.split_bytes * 2:
                 # oversized log: frame-aligned intra-file splits from a
                 # driver state walk — slices decode in parallel from
                 # shipped state (file-global seq via seq_base; split
                 # points are filter-invariant, so pushdown transparency
                 # holds; identity stays (log_file, offset, row_idx)).
-                for s in _split_file(p, o.catalog, o.split_bytes):
-                    if cut and s.end <= cut:
-                        continue  # wholly before the resume point
-                    out.append(s)
+                # Slices wholly before the resume point drop here.
+                cut = o.since_offset if name == o.since_file else 0
+                split += [
+                    s for s in _split_file(p, o.catalog, o.split_bytes)
+                    if s.end > cut
+                ]
             else:
-                whole.append((p, cut, size))
-        if o.pack_bytes > 0 and len(whole) > 1:
-            # rotation-order bin-pack (shared policy: _bin_pack).
-            # Each packed file still emits its own arrow batch with
-            # its own file-local seq/offsets.  Measured: the x100 scan
-            # was task-wave-bound at one-partition-per-file; the first
-            # cut WITHOUT the fan-out floor serialized a pruned 20 MB
-            # scan onto one core (4x regression) — both in PLANS r17.
-            for bin_ in _bin_pack(
-                [(p, cut) for p, cut, _ in whole],
-                [size for _, _, size in whole],
-                o.pack_bytes,
-            ):
-                out.append(
-                    _PackedPartition(bin_)
-                    if len(bin_) > 1
-                    else _FilePartition(*bin_[0])
-                )
-        else:
-            out.extend(_FilePartition(p, cut) for p, cut, _ in whole)
-        return out
+                whole.append(_StreamPartition(p, name, _DATA_START, size))
+        return split + _pack(whole, o.pack_bytes)
 
     def _prune_by_ts(self, paths: list[str]) -> list[str]:
         """mysqlbinlog --start/stop-datetime-style file pruning from an
@@ -873,7 +891,7 @@ class _BinlogBatchReader(DataSourceReader):
             keep.append(p)
         return keep
 
-    def read(self, partition: _FilePartition) -> Iterator:
+    def read(self, partition: _StreamPartition | None) -> Iterator:
         o = self._o
         if partition is None:
             # Spark substitutes a single None partition when
@@ -881,107 +899,21 @@ class _BinlogBatchReader(DataSourceReader):
             # file): an empty scan, not an error.
             yield _arrow_batch({c: [] for c in _ENVELOPE_COLS}, o.columns)
             return
-        if isinstance(partition, _PackedPartition):
-            for path, cut in partition.files:
-                yield self._read_file(path, cut)
-            return
-        if isinstance(partition, _StreamPartition):
-            # an oversized-file slice (split_bytes planning)
-            events = _decode_slice(
-                partition,
-                o.catalog,
-                o.on_error,
-                self._effective_tables(),
-                self._effective_ops(),
-                o.images,
-                stringify=True,
-            )
-            cols, _ = envelope_columns(
-                events, partition.log_file, frame_seq=True,
-                stringified=True,
-            )
-            if (
-                o.since_file is not None
-                and partition.log_file == o.since_file
-            ):
-                cols = _cut_offset_prefix(cols, o.since_offset)
-            yield _arrow_batch(cols, o.columns)
-            return
-        yield self._read_file(partition.path, partition.cut)
-
-    def _read_file(self, fpath: str, cut: int):
-        """Decode one whole file (offset-hi bounded read, range/image
-        pushdown, since cut) into one arrow RecordBatch."""
-        o = self._o
-        size = os.path.getsize(fpath)
-        hi = self._f_off_hi
-        with open(fpath, "rb") as fh:
-            if hi is not None and hi + 1 < size:
-                # offset upper bound: stop the READ at the last frame
-                # that can pass the filter (frame starts are the
-                # envelope offsets, monotone by construction) — the
-                # same [start, end) cut since= uses.  A frame
-                # straddling the bound is completed below.  Clamp to
-                # the 4-byte magic: a bound below it (offset <= 0)
-                # must yield an EMPTY scan, not a bad-magic error.
-                data = fh.read(max(hi + 1, _DATA_START))
-            else:
-                data = fh.read()
-        events, nxt, tmap, seq = decode_binlog_incremental(
-            data,
-            _DATA_START,
-            None,
-            o.catalog,
-            on_error=o.on_error,
-            only_tables=self._effective_tables(),
-            only_ops=self._effective_ops(),
-            images=o.images,
-            min_row_offset=max(self._f_off_lo or 0, cut),
-            row_ts_min=self._f_ts_lo,
-            row_ts_max=self._f_ts_hi,
-            stringify=True,
-        )
-        if hi is not None and hi + 1 < size and nxt <= hi and nxt < size:
-            # one frame starts at <= hi but extends past the bounded
-            # read: complete exactly that frame (its successor starts
-            # past the bound, so one round suffices)
-            with open(fpath, "rb") as fh:
-                fh.seek(nxt + 9)
-                flen = int.from_bytes(fh.read(4), "little")
-                fh.seek(nxt)
-                frame = fh.read(flen)
-            more, _, _, _ = decode_binlog_incremental(
-                frame,
-                nxt,
-                tmap,
-                o.catalog,
-                base=nxt,
-                on_error=o.on_error,
-                checksum=_scan_state_events(events, None),
-                only_tables=self._effective_tables(),
-                only_ops=self._effective_ops(),
-                images=o.images,
-                seq_base=seq,
+        only_tables, only_ops = self._effective_tables(), self._effective_ops()
+        for sl in _slices(partition):
+            cut = o.since_offset if sl.log_file == o.since_file else 0
+            yield _slice_batch(
+                sl, o, only_tables, only_ops,
                 min_row_offset=max(self._f_off_lo or 0, cut),
+                max_offset=self._f_off_hi,
                 row_ts_min=self._f_ts_lo,
                 row_ts_max=self._f_ts_hi,
-                stringify=True,
             )
-            events += more
-        cols, _ = envelope_columns(
-            events, os.path.basename(fpath), frame_seq=True,
-            stringified=True,
-        )
-        if cut:
-            cols = _cut_offset_prefix(cols, cut)
-        return _arrow_batch(cols, o.columns)
 
 
 # ---------------------------------------------------------------------------
 # Stream reader
 # ---------------------------------------------------------------------------
-
-
 
 
 class _BinlogStreamReader(DataSourceStreamReader):
@@ -1021,9 +953,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
         # O(new-files) discovery (r18 VERDICT #1): steady-state
         # triggers probe the dense rotated namespace forward instead
         # of full-listing the directory per call.
-        self._disc = LogDiscovery(
-            self._o.path, reconcile_every=self._o.list_reconcile
-        )
+        self._disc = LogDiscovery(self._o.path)
         # last offset this reader returned — echoed verbatim on
         # no-data triggers so offset JSON equality holds (see
         # latestOffset)
@@ -1184,52 +1114,14 @@ class _BinlogStreamReader(DataSourceStreamReader):
                     if budget <= 0:
                         break
                     continue
-                if head:
-                    self._alg = None
-                    self._tmap = None
-                    self._seq = 0
-                start_alg, start_tmap, start_seq = (
-                    self._alg, self._tmap, self._seq,
-                )
-                while True:
-                    if head:
-                        # include the magic so the codec's header
-                        # check and FDE checksum autodetect run from a
-                        # clean slate
-                        with open(fpath, "rb") as fh:
-                            data = fh.read(_DATA_START + want)
-                        start, base = _DATA_START, 0
-                    else:
-                        with open(fpath, "rb") as fh:
-                            fh.seek(pos)
-                            data = fh.read(want)
-                        start, base = pos, pos
-                    events, nxt, tmap, seq = decode_binlog_incremental(
-                        data,
-                        start,
-                        start_tmap,
-                        o.catalog,
-                        base=base,
-                        on_error=plan_on_error,
-                        checksum=start_alg,
-                        only_ops=frozenset(),
-                        seq_base=start_seq,
+                # a window smaller than one frame widens past the
+                # budget until one frame decodes: the cap bounds
+                # steady-state triggers, never below one frame
+                with open(fpath, "rb") as fh:
+                    nxt, self._alg, self._tmap, self._seq = _walk_window(
+                        fh, pos, size, want, self._alg, self._tmap,
+                        self._seq, o.catalog, plan_on_error,
                     )
-                    if nxt > pos or want >= avail:
-                        break
-                    # budget smaller than one event frame: a capped
-                    # read with no complete frame would otherwise
-                    # break without advancing and every later trigger
-                    # would repeat identically — the silent-stall mode
-                    # (r16 ADVICE).  Widen past the budget until one
-                    # frame decodes (mirrors _split_file's doubling);
-                    # the cap bounds steady-state triggers, never
-                    # below one frame.  Floored at 1 so a degenerate
-                    # budget can never pin the loop at want=0.
-                    want = min(max(want, 1) * 2, avail)
-                self._tmap = tmap
-                self._seq = seq
-                self._alg = _scan_state_events(events, self._alg)
                 advanced = nxt - pos
                 self._cur = {"file": cur_file, "pos": nxt}
                 if budget is not None:
@@ -1356,9 +1248,9 @@ class _BinlogStreamReader(DataSourceStreamReader):
         # fall back to getsize under the rotated-files-are-immutable
         # assumption that was previously implicit.
         ends = end.get("ends", {})
-        # whole-file catch-up slices eligible for bin-packing:
-        # (index into out, byte size)
-        packable: list[tuple[int, int]] = []
+        # whole-file catch-up slices, the only ones that bin-pack:
+        # mid-file resume and split slices stay standalone
+        whole: list[_StreamPartition] = []
         for p in paths:
             name = os.path.basename(p)
             s = start["pos"] if name == s_file else _DATA_START
@@ -1400,8 +1292,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
                         _split_file(p, o.catalog, o.split_bytes, end=e)
                     )
                     continue
-                out.append(_StreamPartition(p, name, s, e))
-                packable.append((len(out) - 1, e - s))
+                whole.append(_StreamPartition(p, name, s, e))
             else:
                 st = self._plan_state.get((name, s))
                 if st is not None:
@@ -1417,24 +1308,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
                     out.append(
                         _StreamPartition(p, name, s, e, prefix_replay=True)
                     )
-        if o.pack_bytes > 0 and len(packable) > 1:
-            # same packing policy as the batch scan (_bin_pack); only
-            # whole-file slices pack — mid-file resume and split
-            # slices stay standalone
-            keep = {idx for idx, _ in packable}
-            packed: list[InputPartition] = []
-            for bin_ in _bin_pack(
-                [out[idx] for idx, _ in packable],
-                [sz for _, sz in packable],
-                o.pack_bytes,
-            ):
-                packed.append(
-                    _PackedStreamPartition(bin_)
-                    if len(bin_) > 1 else bin_[0]
-                )
-            rest = [p for i, p in enumerate(out) if i not in keep]
-            return rest + packed
-        return out
+        return out + _pack(whole, o.pack_bytes)
 
     def commit(self, end: dict) -> None:
         key = (end.get("file", ""), end.get("pos", 0))
@@ -1446,20 +1320,8 @@ class _BinlogStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _StreamPartition) -> Iterator:
         o = self._o
-        slices = (
-            partition.slices
-            if isinstance(partition, _PackedStreamPartition)
-            else [partition]
-        )
-        for sl in slices:
-            events = _decode_slice(
-                sl, o.catalog, o.on_error, o.only_tables, o.only_ops,
-                o.images, stringify=True,
-            )
-            cols, _ = envelope_columns(
-                events, sl.log_file, frame_seq=True, stringified=True
-            )
-            yield _arrow_batch(cols, o.columns)
+        for sl in _slices(partition):
+            yield _slice_batch(sl, o, o.only_tables, o.only_ops)
 
     def stop(self) -> None:
         self._plan_state.clear()

@@ -169,12 +169,6 @@ BINLOG_ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-def _IDENTITY(image):
-    # stringified=True fast path: the codec already emitted the string
-    # form (decode_binlog(..., stringify=True)); nothing to re-walk
-    return image
-
-
 def envelope_records(
     events: list[dict], log_file: str, seq_start: int = 0,
     only_tables: set[tuple[str, str]] | None = None,
@@ -286,7 +280,6 @@ def envelope_columns(
 
     ``stringified=True``: see `envelope_records` — images arrived
     pre-stringified from ``decode_binlog(..., stringify=True)``."""
-    sfy = _IDENTITY if stringified else stringify_image
     cols: dict[str, list] = {c: [] for c in _ENVELOPE_COLS}
     (c_log, c_seq, c_off, c_ts, c_sid, c_xid, c_db, c_tbl, c_op, c_ri,
      c_before, c_after, c_sql, c_tid, c_et, c_ec) = (
@@ -317,18 +310,17 @@ def envelope_columns(
         out_seq = ev["seq"] if frame_seq else seq
         n_common = 1
         if is_rows:
-            before = ev["before"] or []
-            after = ev["after"] or []
-            n = max(len(before), len(after))
-            n_common = n
-            for ri in range(n):
+            before = ev["before"] or ()
+            after = ev["after"] or ()
+            if not stringified:
+                before = [stringify_image(r) for r in before]
+                after = [stringify_image(r) for r in after]
+            nb, na = len(before), len(after)
+            n_common = max(nb, na)
+            for ri in range(n_common):
                 c_ri.append(ri)
-                c_before.append(
-                    sfy(before[ri]) if ri < len(before) else None
-                )
-                c_after.append(
-                    sfy(after[ri]) if ri < len(after) else None
-                )
+                c_before.append(before[ri] if ri < nb else None)
+                c_after.append(after[ri] if ri < na else None)
         else:
             c_ri.append(0)
             c_before.append(None)

@@ -81,12 +81,14 @@ def _key(rows: list[dict]) -> list[str]:
 def _part_paths(parts) -> list[str]:
     """All file paths in a partition plan, whatever the partition kind
     (whole files, packed small-file bins, or split slices)."""
-    from mysql_cdc_spark.sources.binlog_datasource import _PackedPartition
+    from mysql_cdc_spark.sources.binlog_datasource import (
+        _PackedStreamPartition,
+    )
 
     out = []
     for p in parts:
-        if isinstance(p, _PackedPartition):
-            out.extend(path for path, _cut in p.files)
+        if isinstance(p, _PackedStreamPartition):
+            out.extend(s.path for s in p.slices)
         else:
             out.append(p.path)
     return out
@@ -1473,15 +1475,15 @@ class TestPacking:
         )
         parts = reader.partitions()
         from mysql_cdc_spark.sources.binlog_datasource import (
-            _PackedPartition,
+            _PackedStreamPartition,
         )
 
         assert 3 <= len(parts) <= 5
         got = _part_paths(parts)
         assert [os.path.basename(p) for p in got] == sorted(sizes)
         for p in parts:
-            if isinstance(p, _PackedPartition):
-                assert sum(sizes[os.path.basename(f)] for f, _ in p.files) <= one * 3
+            if isinstance(p, _PackedStreamPartition):
+                assert sum(sizes[s.log_file] for s in p.slices) <= one * 3
 
     def test_pack_composes_with_since_and_filters(self, spark, fixture_dir):
         files = sorted(

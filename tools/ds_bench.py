@@ -259,8 +259,9 @@ def main() -> None:
     # in the backlog size.  Synthetic dirs with N retained logs and a
     # consumer at the tail; each trigger appends ONE new file and pays
     # latestOffset + partitions + commit.  `incr` = forward probing
-    # (default), `full` = list_reconcile_triggers=0 (every trigger
-    # full-lists — the pre-r19 shape).  Flat incr across backlog sizes
+    # (the reader's default discovery), `full` = a LogDiscovery with
+    # reconcile_every=0 swapped in (every trigger full-lists — the
+    # pre-r19 shape).  Flat incr across backlog sizes
     # and a full column growing with N is the claim.
     def _discovery_bench() -> dict:
         import os
@@ -269,6 +270,7 @@ def main() -> None:
         from mysql_cdc_spark.sources.binlog_datasource import (
             _BinlogStreamReader,
         )
+        from mysql_cdc_spark.sources.binlog_source import LogDiscovery
 
         w = BinlogWriter()
         w.write_query("d", "BEGIN", ts=1)
@@ -285,10 +287,10 @@ def main() -> None:
                 for i in range(1, n_backlog):
                     os.link(tpl, d / f"binlog.{i:06d}")
                 nxt = n_backlog
-                for mode, opt in (("full", "0"), ("incr", "64")):
-                    r = _BinlogStreamReader(
-                        {"path": str(d), "list_reconcile_triggers": opt}
-                    )
+                for mode in ("full", "incr"):
+                    r = _BinlogStreamReader({"path": str(d)})
+                    if mode == "full":
+                        r._disc = LogDiscovery(str(d), reconcile_every=0)
                     cur = r.latestOffset()  # anchor: decodes tail file only
                     r.commit(cur)
                     k = 30
