@@ -63,4 +63,10 @@ Layout:
         latency.py        — end-to-end CDC latency decomposition bench
 """
 
+from pathlib import Path
+
 __version__ = "0.3.0"
+
+# Scratch root for materialized fixtures, stream logs and checkpoints:
+# `.stream_tmp` beside the package, in the checkout it was imported from.
+STREAM_TMP = str(Path(__file__).resolve().parent.parent / ".stream_tmp")

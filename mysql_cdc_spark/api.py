@@ -24,6 +24,7 @@ import re
 
 from pyspark.sql import SparkSession
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.operators import query as q
 from mysql_cdc_spark.operators.cursor import ForwardOnlyCursor
 from mysql_cdc_spark.sources.events_cdc import changes
@@ -94,7 +95,7 @@ class CDCStatement:
         # reaps cp_* dirs whose owner process is dead, so a concurrent
         # import can't delete this live query's source log.
         name = f"cdc{os.getpid()}_{uuid.uuid4().hex[:10]}"
-        cp_dir = f"/root/repo/.stream_tmp/cp_{name}"
+        cp_dir = f"{STREAM_TMP}/cp_{name}"
         cursor = rt.QueueStreamingCursor().attach(
             out, cp_dir, trigger_seconds=trigger_seconds
         )

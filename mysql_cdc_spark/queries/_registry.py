@@ -37,82 +37,9 @@ HEADLINE: list[str] = [
 ]
 
 
-# ---------------------------------------------------------------------------
-# Plan-construction memo (r20; r19 VERDICT next-round #8).  Plan
-# construction is pure Py4J round-trips (~23 % of the headline wall at
-# sf0.1): for a PURE-Catalyst batch query, the DataFrame built for the
-# same (session, sf_dir, fixture bytes) is plan-identical, so
-# rebuilding it per bench rep only re-pays JVM parse/analyze.  This
-# memoizes the DataFrame OBJECT — a PLAN, never results: every
-# execution of it (noop write, collect) recomputes from the parquet
-# inputs.  STRICT opt-in: only queries audited to have zero
-# construction-time side effects or materialization — no
-# cache()/persist, no localCheckpoint, no driver collect embedded in
-# the plan, no stream/fixture generation — are listed (llm_dedup_minhash
-# carries a cache(), llm_knn collects its query set: both excluded).
-# The key carries every fixture file's (name, mtime_ns, size), so a
-# rewritten fixture drops the memo; the map is module state in THIS
-# process only — nothing persists across processes or runs.
-MEMO_SAFE: frozenset[str] = frozenset(
-    {
-        "cdc_envelope",
-        "cdc_select_all",
-        "cdc_update_sum",
-        "cdc_latest_state",
-        "cdc_txn_events",
-        "llm_text_stats",
-        "ts_asof_join",
-        "ts_range_join",
-        "sk_hll_user_minutes",
-    }
-)
-
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _fixture_stat(sf_dir: str) -> tuple:
-    """(name, mtime_ns, size) of every entry in sf_dir — the memo's
-    freshness token.  Directory-valued fixtures (multi-file parquet)
-    are covered by the directory's own mtime, which changes whenever a
-    file inside is added/replaced."""
-    import os
-
-    try:
-        names = sorted(os.listdir(sf_dir))
-    except OSError:
-        return ("<missing>",)
-    out = []
-    for n in names:
-        try:
-            st = os.stat(os.path.join(sf_dir, n))
-        except OSError:
-            continue
-        out.append((n, st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
-
-def clear_plan_memo() -> None:
-    """Drop every memoised plan (tests / explicit invalidation)."""
-    _PLAN_MEMO.clear()
-
-
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
-        if name in MEMO_SAFE:
-            def memoized(spark: SparkSession, sf_dir: str,
-                         _fn: QueryFn = fn, _name: str = name) -> DataFrame:
-                key = (spark, _name, sf_dir, _fixture_stat(sf_dir))
-                df = _PLAN_MEMO.get(key)
-                if df is None:
-                    df = _PLAN_MEMO[key] = _fn(spark, sf_dir)
-                return df
-
-            memoized.__name__ = fn.__name__
-            memoized.__doc__ = fn.__doc__
-            memoized.__wrapped__ = fn
-            QUERIES[name] = memoized
-        else:
-            QUERIES[name] = fn
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -3,6 +3,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from mysql_cdc_spark import STREAM_TMP as _STREAM_TMP
 from mysql_cdc_spark.sources.events_cdc import (
     changes,
     rows_changes,
@@ -78,7 +79,6 @@ def _head_offset(spark, sf_dir: str) -> int:
     return int(env.agg(F.max("offset")).collect()[0][0])
 
 
-_STREAM_TMP = "/root/repo/.stream_tmp"
 # Bump when the derivation rules change: versioned scratch dirs ensure
 # stale materializations from an older derivation are never reused.
 _FIXTURE_VERSION = 7

@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(env_value: str | None, phys_bytes: int) -> str:
+    """`spark.driver.memory`: ``$SPARK_DRIVER_MEM`` when set, else the
+    smaller of 16g and half of physical RAM.  A flat 16g is all the RAM
+    of a 16 GB host, where a full sf0.1 correctness sweep's driver got
+    OOM-killed."""
+    if env_value:
+        return env_value
+    return f"{min(16 << 30, phys_bytes // 2) >> 20}m"
+
+
 def get_spark(app_name: str = "mysql-cdc-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -49,7 +59,13 @@ def get_spark(app_name: str = "mysql-cdc-spark") -> SparkSession:
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory(
+                os.environ.get("SPARK_DRIVER_MEM"),
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+            ),
+        )
     )
     return builder.getOrCreate()
 

@@ -441,11 +441,6 @@ def _file_head_ts(path: str) -> tuple[int | None, int | None]:
     return first_payload, min_ts
 
 
-def _file_first_ts(path: str) -> int | None:
-    """First payload timestamp (see :func:`_file_head_ts`)."""
-    return _file_head_ts(path)[0]
-
-
 def _scan_state_events(events: list[dict], alg: str | None) -> str | None:
     """Fold FDE declarations out of a walk's event list."""
     for ev in events:

@@ -37,6 +37,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.sources.binlog_codec import (
     TYPE_LONG,
     TYPE_NEWDECIMAL,
@@ -79,7 +80,7 @@ class _GrowingLog:
 def measure_latency(
     spark: SparkSession,
     turns: int = 20,
-    scratch_root: str = "/root/repo/.stream_tmp",
+    scratch_root: str = STREAM_TMP,
     trigger_seconds: float = 0.05,
     timeout: float = 30.0,
 ) -> dict:

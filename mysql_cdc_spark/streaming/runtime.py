@@ -41,6 +41,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.model import ENVELOPE_SCHEMA
 
 
@@ -60,7 +61,7 @@ def write_event_log(env: DataFrame, log_dir: str, n_files: int = 4) -> None:
 def ensure_event_log(
     spark: SparkSession,
     sf_dir: str,
-    root: str = "/root/repo/.stream_tmp",
+    root: str = STREAM_TMP,
     version: int = 2,
     n_files: int = 4,
 ) -> str:

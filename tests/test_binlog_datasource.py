@@ -1153,9 +1153,9 @@ class TestRangeAndNotNullPushdown:
         assert len(files) >= 3
         # upper bound below the LAST file's first event timestamp must
         # prune that file from the plan entirely
-        from mysql_cdc_spark.sources.binlog_datasource import _file_first_ts
+        from mysql_cdc_spark.sources.binlog_datasource import _file_head_ts
 
-        last_first = _file_first_ts(str(files[-1]))
+        last_first = _file_head_ts(str(files[-1]))[0]
         r = _BinlogBatchReader({"path": fixture_dir})
         list(r.pushFilters([LessThanOrEqual(("ts",), last_first - 1)]))
         parts = r.partitions()

@@ -6,9 +6,12 @@ map-side partial) fails CI instead of surfacing in the next bench.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 
-from mysql_cdc_spark.queries import QUERIES
+from mysql_cdc_spark.queries import HEADLINE, QUERIES
 
 
 @pytest.fixture(autouse=True)
@@ -29,6 +32,71 @@ HEADLINE_NAMES = [
     "cdc_envelope", "cdc_select_all", "cdc_update_sum",
     "cdc_latest_state", "cdc_txn_events", "llm_text_stats",
 ]
+
+
+# Plan fingerprint of each bench headline query: operator counts in the
+# pre-execution physical plan.  The counts read the same at local[4] and
+# local[32], and at sf0.001 and sf0.1, so this pins the plan regressions
+# (a new shuffle, a lost pushdown, a Python boundary) on any host, where
+# a wall-clock floor could only discriminate on the host that recorded
+# it.
+_FP_NODES = frozenset({
+    "Exchange", "BroadcastExchange",
+    "BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+    "FileScan", "BatchScan", "InMemoryTableScan", "Window", "Generate",
+    # Python-boundary execs
+    "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas", "AggregateInPandas", "WindowInPandas",
+    "ArrowEvalPython", "BatchEvalPython",
+})
+_NODE = re.compile(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+)")
+
+HEADLINE_FINGERPRINTS: dict[str, dict[str, int]] = {
+    "cdc_envelope": {"FileScan": 1, "Exchange": 1, "Generate": 1},
+    "cdc_select_all": {"FileScan": 1, "Generate": 2},
+    "cdc_update_sum": {"FileScan": 1, "Exchange": 1},
+    "cdc_latest_state": {"FileScan": 1, "Exchange": 1},
+    "cdc_txn_events": {"FileScan": 1},
+    # the cached signature table prints once per InMemoryTableScan
+    "llm_dedup_minhash": {
+        "FileScan": 3, "InMemoryTableScan": 3, "Exchange": 2,
+        "BroadcastExchange": 2, "BroadcastHashJoin": 2, "Generate": 2,
+        "Window": 3,
+    },
+    "llm_knn": {"FileScan": 1, "MapInArrow": 1, "Exchange": 1, "Window": 1},
+    "llm_text_stats": {"FileScan": 1},
+    "ts_asof_join": {
+        "FileScan": 2, "pushed_scans": 2, "Exchange": 1, "Window": 1,
+    },
+    "ts_range_join": {
+        "FileScan": 2, "pushed_scans": 2, "Exchange": 1,
+        "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Generate": 1,
+    },
+    "sk_hll_user_minutes": {"FileScan": 1, "Exchange": 2},
+}
+
+
+def _fingerprint(plan: str) -> dict[str, int]:
+    fp: Counter[str] = Counter()
+    for line in plan.splitlines():
+        m = _NODE.match(line)
+        if m and m.group(1) in _FP_NODES:
+            fp[m.group(1)] += 1
+            if "PushedFilters: [" in line and "PushedFilters: []" not in line:
+                fp["pushed_scans"] += 1
+    return dict(fp)
+
+
+@pytest.mark.parametrize("name", HEADLINE)
+def test_headline_plan_fingerprint(spark, sf_dir, name):
+    want = dict(HEADLINE_FINGERPRINTS[name])
+    if name == "cdc_envelope" and spark.sparkContext.defaultParallelism < 4:
+        # the small-input rebalance fires only when the one-split
+        # fixture is under half the parallelism (_rebalance_small_input)
+        want.pop("Exchange")
+    got = _fingerprint(_plan(spark, sf_dir, name))
+    assert got == want, f"{name} plan fingerprint changed: {got}"
 
 
 def test_no_cartesian_products_anywhere(spark, sf_dir):
