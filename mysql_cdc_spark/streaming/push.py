@@ -25,7 +25,30 @@ without JNotify/JDBC:
   record is identical to the one an unfiltered delivery would carry.
   Decode stays full — foreign-table row bodies are still parsed, so
   malformed bytes raise or quarantine exactly as without the filter —
-  and images arrive from the codec already in envelope string form.
+  and images arrive from the codec already in envelope string form;
+- the tailer decodes in bounded windows (`binlog_tailer.WINDOW_BYTES`)
+  and each window is delivered before the next is decoded, so a fresh
+  cursor's first row waits for one window, not for a whole file;
+- catch-up is parallel across rotated files (HYPERSONIC's split: the
+  partitioning stays serial, the evaluation runs in parallel).  Decoder
+  state resets at every rotation, so a file is a partition: when the
+  first turn — or one that read a window or more — finds successors of
+  the cursor's file on disk, each file from the cursor onward is
+  tailed by a worker forked from the tailer thread
+  (`multiprocessing.get_context("fork")`: the worker inherits the
+  delivery and pays no import).  A worker calls `gc.freeze()` first, so
+  its cyclic GC never walks and copies the inherited heap, runs the
+  tailer's own window loop and sends each window's surfaced records
+  and end state over a pipe.  At most `os.cpu_count()` files are in
+  flight, and the parent reads a worker's pipe only while fewer than
+  `queue_size` of its windows wait, so memory stays bounded by the
+  existing queue bound.  The parent delivers strictly in log order and
+  stops at the first file that did not ROTATE into the next listed
+  one; the live tail stays serial.  Python ≥ 3.12 warns when a
+  multi-threaded process forks (a process using Spark has py4j threads), and
+  only the forking thread survives in the child: the worker calls the
+  codec and envelope functions themselves, never a wrapper installed on
+  them whose lock another thread might have held at the fork.
 
 Division of labor with the `mysql_binlog` stream
 (`spark.readStream.format("mysql_binlog")`, sources/binlog_datasource.py):
@@ -41,14 +64,20 @@ from __future__ import annotations
 import ctypes
 import ctypes.util
 import functools
+import gc
+import multiprocessing
+import multiprocessing.connection
 import os
 import queue
 import select
 import threading
 import time
+from collections import deque
 from collections.abc import Iterator
 
-from mysql_cdc_spark.sources.binlog_source import envelope_records
+from mysql_cdc_spark.sources import binlog_codec, binlog_source
+from mysql_cdc_spark.sources.binlog_source import _ROTATED_LOG_RE, envelope_records
+from mysql_cdc_spark.streaming import binlog_tailer
 from mysql_cdc_spark.streaming.binlog_tailer import BinlogTailer
 
 # Public Linux inotify constants (linux/inotify.h).
@@ -120,6 +149,34 @@ class INotifyWatcher:
             pass
 
 
+def envelope_batch(
+    batch: list[dict],
+    log_file: str,
+    seq: int,
+    row_filter: tuple[str, str, frozenset[str]] | None,
+) -> tuple[list[dict], int]:
+    """Envelope one batch of a file's envelope events from the file's
+    `seq` on, keeping only the records `row_filter` (db, table, row ops)
+    surfaces.  Returns (records, next seq).  Every event takes its seq
+    slot whether or not it survives the filter, so a surfaced record is
+    identical to the one an unfiltered delivery would carry.  The serial
+    delivery and the catch-up workers both call it."""
+    if row_filter is None:
+        return envelope_records(batch, log_file, seq, stringified=True)
+    # Number the kept events locally, then map to their slots.
+    db, tbl, ops = row_filter
+    kept = [
+        i for i, ev in enumerate(batch)
+        if ev["op"] in ops and ev["tbl"] == tbl and ev["db"] == db
+    ]
+    records, _ = envelope_records(
+        [batch[i] for i in kept], log_file, stringified=True
+    )
+    for rec in records:
+        rec["seq"] = seq + kept[rec["seq"]]
+    return records, seq + len(batch)
+
+
 class PushDelivery:
     """Background tailer thread: inotify-wake → incremental decode →
     envelope batches into a bounded queue (the reference's reader
@@ -144,6 +201,15 @@ class PushDelivery:
     keeps its position only in agent memory and loses it on restart
     (mysql_binlog.clj:914-916); this is the push-path analog of the
     streaming path's checkpoint.
+
+    Catch-up (`_catch_up`): with successors of the cursor's file on
+    disk, forked workers tail one file each, window by window, and the
+    tailer thread applies each window's end state to the tailer before
+    it queues the window — so snapshots, the journal and the serial
+    turns that follow are exactly a serial run's.  Up to
+    `os.cpu_count()` files are in flight and up to `queue_size` windows
+    wait per worker; every worker is joined (terminated first on stop
+    or error) before the catch-up returns.
     """
 
     def __init__(
@@ -177,6 +243,7 @@ class PushDelivery:
         self._journaled_pos: tuple[str, int] | None = None
         self._restore_journal()
         self._watcher: INotifyWatcher | None = None
+        self._behind = True                    # look for a backlog first
         self._thread = threading.Thread(
             target=self._run, name="cdc-push-tailer", daemon=True
         )
@@ -265,26 +332,12 @@ class PushDelivery:
 
     def _deliver(self, batch: list[dict]) -> None:
         log_file = batch[0]["log_file"]
-        seq = self._seq.get(log_file, 0)
-        if self.row_filter is None:
-            records, self._seq[log_file] = envelope_records(
-                batch, log_file, seq, stringified=True
-            )
-        else:
-            # The tailer hands over envelope events only, each of which
-            # takes one seq slot whether or not it survives the filter:
-            # number the kept events locally, then map to their slots.
-            db, tbl, ops = self.row_filter
-            kept = [
-                i for i, ev in enumerate(batch)
-                if ev["op"] in ops and ev["tbl"] == tbl and ev["db"] == db
-            ]
-            records, _ = envelope_records(
-                [batch[i] for i in kept], log_file, stringified=True
-            )
-            for rec in records:
-                rec["seq"] = seq + kept[rec["seq"]]
-            self._seq[log_file] = seq + len(batch)
+        records, self._seq[log_file] = envelope_batch(
+            batch, log_file, self._seq.get(log_file, 0), self.row_filter
+        )
+        self._put(records)
+
+    def _put(self, records: list[dict]) -> None:
         snap = self._snapshot() if self._journal_path is not None else None
         if not records and snap is None:
             return  # nothing to surface and no position to journal
@@ -299,6 +352,175 @@ class PushDelivery:
             except queue.Full:
                 continue
 
+    # -- parallel catch-up -------------------------------------------------
+
+    def _backlog(self) -> list[str]:
+        """The cursor's file and the same-stem `*.NNNNNN` files listed
+        after it, when there is at least one such successor; else []."""
+        cur = self.tailer.current_log
+        if not _ROTATED_LOG_RE.search(cur):
+            return []
+        stem = cur.rpartition(".")[0]
+        later = sorted(
+            name for name in os.listdir(self._log_dir)
+            if name > cur and name.rpartition(".")[0] == stem
+            and _ROTATED_LOG_RE.search(name)
+        )
+        return [cur, *later] if later else []
+
+    def _turn(self) -> None:
+        # Successors are looked for on the first turn and after a turn
+        # that read a window or more, i.e. only while catching up: a
+        # live tail's turns list no directory.
+        if self._behind:
+            files = self._backlog()
+            if files:
+                self._catch_up(files)
+        self.tailer.turn()
+        self._behind = self.tailer.last_read_bytes >= binlog_tailer.WINDOW_BYTES
+
+    def _catch_up(self, files: list[str]) -> None:
+        """Tail `files` — the cursor's file, then the successors listed
+        beside it — each in a forked worker, and deliver the workers'
+        windows strictly in log order.
+
+        Before each put, a window's end state is applied to the tailer,
+        so the journal snapshot and the serial turns that follow see
+        exactly what a serial run would.  Delivery stops after the
+        first file that did not ROTATE into the next listed one: the
+        later files' results were speculative and are discarded, their
+        errors with them.  A worker's error is raised when its file is
+        reached.  At most `width` files are in flight (started, not yet
+        delivered), and a worker's pipe is read only while fewer than
+        `queue.maxsize` of its windows wait, so memory stays bounded.
+        Every worker is ended and joined before this returns."""
+        ctx = multiprocessing.get_context("fork")
+        width = os.cpu_count() or 1
+        workers: list = []                     # (process, pipe) per file
+        inbox: list[deque] = []
+        done: list[bool] = []
+
+        def receive(timeout: float) -> None:
+            """Read every worker pipe that holds a message, except those
+            of workers whose waiting windows reached the bound."""
+            limit = self.queue.maxsize or float("inf")
+            live = [j for j, w in enumerate(workers)
+                    if w is not None and not done[j] and len(inbox[j]) < limit]
+            pipes = {workers[j][1]: j for j in live}
+            exits = {workers[j][0].sentinel: j for j in live}
+            for ready in multiprocessing.connection.wait([*pipes, *exits], timeout):
+                j = pipes.get(ready)
+                if j is None:                  # a worker exited
+                    j = exits[ready]
+                    if done[j] or workers[j][1].poll():
+                        continue               # its last messages come first
+                    msg = None
+                else:
+                    try:
+                        msg = ready.recv()
+                    except EOFError:
+                        msg = None
+                if msg is None:
+                    msg = RuntimeError(
+                        f"catch-up worker for {files[j]} exited"
+                        f" ({workers[j][0].exitcode}) before it finished"
+                    )
+                inbox[j].append(msg)
+                done[j] = isinstance(msg, BaseException) or msg[0] is None
+
+        try:
+            for k in range(len(files)):
+                while len(workers) < min(len(files), k + width):
+                    workers.append(self._fork(ctx, files, len(workers)))
+                    inbox.append(deque())
+                    done.append(False)
+                while True:
+                    if self._stop.is_set():
+                        return
+                    receive(0 if inbox[k] else 0.1)
+                    if not inbox[k]:
+                        continue
+                    msg = inbox[k].popleft()
+                    if isinstance(msg, BaseException):
+                        raise msg
+                    records, log_file, seq, position = msg
+                    self.tailer.seek(position)
+                    if records is None:        # the file's end state
+                        break
+                    self._seq[log_file] = seq
+                    self._put(records)
+                proc, pipe = workers[k]
+                proc.join()
+                pipe.close()
+                workers[k] = None
+                if k + 1 == len(files) or self.tailer.current_log != files[k + 1]:
+                    return
+        finally:
+            running = [w for w in workers if w is not None]
+            for proc, _ in running:
+                if proc.is_alive():
+                    proc.terminate()
+            for proc, pipe in running:
+                proc.join(1.0)
+                if proc.is_alive():
+                    proc.kill()
+                    proc.join()
+                pipe.close()
+
+    def _fork(self, ctx, files: list[str], j: int):
+        """Start the worker for `files[j]`: from the tailer's position
+        for the cursor's file, from the head for a successor."""
+        reader, writer = ctx.Pipe(duplex=False)
+        position = (
+            self.tailer.position() if j == 0 else (files[j], 4, None, None, False)
+        )
+        proc = ctx.Process(
+            target=self._catch_up_worker, args=(position, writer),
+            name=f"cdc-catch-up-{files[j]}", daemon=True,
+        )
+        proc.start()
+        writer.close()
+        return proc, reader
+
+    def _catch_up_worker(self, position: tuple, pipe) -> None:
+        """Child side: tail one file from `position` through the
+        tailer's window loop, send each window's surfaced records and
+        end state, then the file's end state or the error."""
+        global envelope_records
+        # The heap inherited from the parent is long-lived: without
+        # this, the child's cyclic GC walks it and copies its pages.
+        gc.freeze()
+        # Only the forking thread survives a fork, so a lock another
+        # thread held at that moment stays held here.  A wrapper
+        # installed on the decode or envelope hook points (a tracer's,
+        # say) may take one: call the functions themselves.
+        binlog_tailer.decode_binlog_incremental = binlog_codec.decode_binlog_incremental
+        envelope_records = binlog_source.envelope_records
+        tailer = self.tailer
+        tailer.seek(position)
+        seq = self._seq.get(position[0], 0)
+        row_filter = self.row_filter
+
+        def send(batch: list[dict]) -> None:
+            nonlocal seq
+            log_file = batch[0]["log_file"]
+            records, seq = envelope_batch(batch, log_file, seq, row_filter)
+            pipe.send((records, log_file, seq, tailer.position()))
+
+        tailer.event_fn = send
+        try:
+            tailer._tail_file()
+            pipe.send((None, None, None, tailer.position()))
+        except Exception as exc:
+            try:
+                pipe.send(exc)
+            except Exception:                  # an error that does not pickle
+                pipe.send(RuntimeError(f"{type(exc).__name__}: {exc}"))
+        finally:
+            # skip the inherited interpreter's exit: its buffers, its
+            # atexit hooks and any lock another parent thread held
+            os._exit(0)
+
     def _run(self) -> None:
         try:
             if INotifyWatcher.available():
@@ -306,13 +528,13 @@ class PushDelivery:
                     self._watcher = INotifyWatcher(self._log_dir)
                 except OSError:
                     self._watcher = None
-            self.tailer.turn()  # drain whatever already exists
+            self._turn()  # drain whatever already exists
             while not self._stop.is_set():
                 if self._watcher is not None:
                     self._watcher.wait(timeout=self._poll * 4)
                 else:
                     time.sleep(self._poll)
-                self.tailer.turn()
+                self._turn()
         except BaseException as exc:  # surface on the consumer side
             self.error = exc
         finally:
@@ -346,13 +568,15 @@ class PushCursor:
     def next(self, timeout: float | None = None) -> bool:
         """Advance to the next envelope record; block until one
         arrives or `timeout` elapses (False on timeout).  Re-raises a
-        tailer-thread failure instead of blocking forever.  Handing out
+        tailer-thread failure instead of blocking forever, once the
+        batches queued before it are consumed.  Handing out
         a batch's LAST record journals that batch's snapshot (consumed
         position) — see PushDelivery's durability contract.  An empty
         batch (a turn that surfaced nothing) is journaled on arrival."""
         deadline = None if timeout is None else time.monotonic() + timeout
         while self._pos + 1 >= len(self._batch):
-            if self._delivery.error is not None:
+            # The producer sets `error` only after its last put.
+            if self._delivery.error is not None and self._delivery.queue.empty():
                 raise self._delivery.error
             remaining = 0.1
             if deadline is not None:

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from mysql_cdc_spark import api
+from mysql_cdc_spark import STREAM_TMP, api
 
 
 @pytest.fixture(autouse=True)
@@ -92,7 +92,7 @@ def test_continuous_query_blocks_then_delivers_new_rows(spark, sf_dir):
     from mysql_cdc_spark.sources.events_cdc import changes
     from mysql_cdc_spark.streaming import runtime as rt
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{STREAM_TMP}/test/{uuid.uuid4().hex[:10]}"
     env = changes(spark, sf_dir)
     first = env.filter(F.col("offset") < 2000)
     second = env.filter((F.col("offset") >= 2000) & (F.col("offset") < 4000))
@@ -170,7 +170,7 @@ def test_stream_handle_stop_releases_cursor_and_removes_checkpoint(spark, sf_dir
     from mysql_cdc_spark.sources.events_cdc import changes
     from mysql_cdc_spark.streaming import runtime as rt
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{STREAM_TMP}/test/{uuid.uuid4().hex[:10]}"
     env = changes(spark, sf_dir)
     rt.write_event_log(env.limit(500), f"{scratch}/log", n_files=1)
 
@@ -184,7 +184,7 @@ def test_stream_handle_stop_releases_cursor_and_removes_checkpoint(spark, sf_dir
         deadline = _time.monotonic() + 30
         while cur._queue_depth() == 0 and _time.monotonic() < deadline:
             _time.sleep(0.05)                   # let a batch land, unconsumed
-        cp_parent = "/root/repo/.stream_tmp"
+        cp_parent = STREAM_TMP
         cps = {p for p in os.listdir(cp_parent) if p.startswith("cp_cdc_")}
         t0 = _time.monotonic()
         handle.stop()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.sources.binlog_codec import (
     MAGIC,
     TYPE_LONG,
@@ -245,7 +246,7 @@ def test_spark_source_multi_row_events(spark):
 
     from mysql_cdc_spark.sources.binlog_source import read_binlog_envelope
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{STREAM_TMP}/test/{uuid.uuid4().hex[:10]}"
     os.makedirs(scratch, exist_ok=True)
     w = BinlogWriter()
     w.write_table_map(T3)

@@ -18,6 +18,7 @@ import uuid
 
 import pytest
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.sources import binlog_source as bs
 from mysql_cdc_spark.sources.binlog_codec import (
     WRITE_ROWS_EVENT,
@@ -33,7 +34,7 @@ from mysql_cdc_spark.sources.binlog_datasource import (
     register_binlog_source,
 )
 
-TMP = "/root/repo/.stream_tmp/ds_tests"
+TMP = f"{STREAM_TMP}/ds_tests"
 
 _T = TableDef("foo", "auto", [(TYPE_LONG, None), (TYPE_VARCHAR, 50)], table_id=7)
 _CAT_JSON = '{"foo.auto": ["id", "val"]}'

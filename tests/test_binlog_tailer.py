@@ -10,6 +10,7 @@ import uuid
 
 import pytest
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.sources.binlog_codec import (
     TYPE_LONG,
     TYPE_NEWDECIMAL,
@@ -26,7 +27,7 @@ CAT = {("foo", "auto"): ["id", "val", "word"]}
 
 @pytest.fixture()
 def log_dir():
-    d = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    d = f"{STREAM_TMP}/test/{uuid.uuid4().hex[:10]}"
     os.makedirs(d, exist_ok=True)
     yield d
     shutil.rmtree(d, ignore_errors=True)

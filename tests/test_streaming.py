@@ -10,11 +10,12 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from mysql_cdc_spark import STREAM_TMP
 from mysql_cdc_spark.operators import query
 from mysql_cdc_spark.sources.events_cdc import changes
 from mysql_cdc_spark.streaming import runtime as rt
 
-TMP = "/root/repo/.stream_tmp/test"
+TMP = f"{STREAM_TMP}/test"
 
 
 @pytest.fixture()
@@ -299,7 +300,7 @@ def test_dedup_within_watermark_bounded_state(spark):
 
     from mysql_cdc_spark.model import ENVELOPE_SCHEMA
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{TMP}/{uuid.uuid4().hex[:10]}"
     log = f"{scratch}/log"
     try:
         base = datetime(2024, 1, 1)
@@ -390,7 +391,7 @@ def test_txn_assembly_watermark_gc_and_reorder(spark):
     from mysql_cdc_spark.streaming import runtime as rt
     from mysql_cdc_spark.streaming.stateful import txn_events_stateful
 
-    scratch = f"/root/repo/.stream_tmp/test/{uuid.uuid4().hex[:10]}"
+    scratch = f"{TMP}/{uuid.uuid4().hex[:10]}"
     log_dir = f"{scratch}/log"
     t0 = datetime(2024, 1, 1)
 

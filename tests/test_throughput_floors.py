@@ -202,7 +202,8 @@ def test_multicore_decode_per_core_floor():
         get_spark("floor-fixture")  # session only needed by generator callers
         bs.generate_binlog_from_events("/root/testdata/sf0.1", str(fixture))
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/decode_scaling.py",
+        [sys.executable,
+         str(pathlib.Path(__file__).resolve().parent.parent / "tools" / "decode_scaling.py"),
          "--worker", "8", str(fixture)],
         capture_output=True, text=True, timeout=600,
     )

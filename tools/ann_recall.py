@@ -33,8 +33,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-ORGANIC_X10 = "/root/repo/.stream_tmp/stress/organic_x10"
-ORGANIC_X100 = "/root/repo/.stream_tmp/stress/organic_x100"
+STRESS = Path(__file__).resolve().parent.parent / ".stream_tmp" / "stress"
+ORGANIC_X10 = str(STRESS / "organic_x10")
+ORGANIC_X100 = str(STRESS / "organic_x100")
 
 
 def topk_sets(df) -> dict[int, set[int]]:

@@ -25,7 +25,9 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-X10_EVENTS = "/root/repo/.stream_tmp/stress/organic_x10"
+X10_EVENTS = str(
+    pathlib.Path(__file__).resolve().parent.parent / ".stream_tmp" / "stress" / "organic_x10"
+)
 
 
 def ensure_fixture() -> str:

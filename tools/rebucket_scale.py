@@ -36,7 +36,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SCRATCH = Path("/root/repo/.stream_tmp/rebucket_scale")
+SCRATCH = Path(__file__).resolve().parent.parent / ".stream_tmp" / "rebucket_scale"
 
 
 def main() -> None:

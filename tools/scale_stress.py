@@ -17,7 +17,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 BASE = "/root/testdata/sf0.1"
-SCRATCH = "/root/repo/.stream_tmp/stress"
+SCRATCH = str(Path(__file__).resolve().parent.parent / ".stream_tmp" / "stress")
 
 
 def main() -> None:

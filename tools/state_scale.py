@@ -36,7 +36,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SCRATCH = Path("/root/repo/.stream_tmp/state_scale")
+SCRATCH = Path(__file__).resolve().parent.parent / ".stream_tmp" / "state_scale"
 N_BATCHES = 4
 
 _PROVIDERS = {
